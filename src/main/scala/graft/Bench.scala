@@ -1,8 +1,6 @@
 package graft
 
-import graft.core.{SyntheticCorpus, TokenAdapter}
-import graft.features.Kinematic
-import graft.session.Sessionize
+import graft.core.SyntheticCorpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,16 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** The flagship pipeline: scan → explode → fused 8-feature window →
-    * gap sessionize → consume EVERY feature (so column pruning cannot drop
-    * any of the work). One shuffle for the window chain + one for the agg. */
+  /** The flagship pipeline: scan → per-doc kinematic + session kernel →
+    * consume EVERY feature (so column pruning cannot drop any of the work).
+    * Zero shuffles: the corpus is pre-grouped (see FlagshipJob — the one
+    * definition Bench/Explain/RunPipeline all share). */
   def flagship(spark: SparkSession, corpusPath: String): (Long, DataFrame) = {
     val corpus = spark.read.parquet(corpusPath)
-    // SPARK_GRAFT_PRESHUFFLE=0 disables the compact pre-shuffle for A/B
-    // measurement (see FlagshipJob — the one definition Bench/Explain/
-    // RunPipeline all share).
-    val out = graft.pipeline.FlagshipJob.windowConsumeAll(
-      corpus, preShuffleCompact = !sys.env.get("SPARK_GRAFT_PRESHUFFLE").contains("0"))
+    val out = graft.pipeline.FlagshipJob.groupedConsumeAll(corpus)
     val tokens = corpus.agg(sum(col("n_tok"))).first().getLong(0)
     (tokens, out)
   }
@@ -60,10 +55,9 @@ object Bench {
     val windowBuffer = sys.env.getOrElse("SPARK_GRAFT_WINDOW_BUFFER", "1048576")
     // collect_list is a TypedImperativeAggregate: ObjectHashAggregateExec
     // silently falls back to SORT-based aggregation after this many hash-map
-    // keys per task (Spark default 128 — always exceeded by a re-group over
-    // >128 docs/partition, turning the "no sort" regroup route into the very
-    // sort it replaces). Sized so final-stage maps stay hash-based at bench
-    // scale; memory per task is the partition payload either way.
+    // keys per task (Spark default 128). Sized so the queries' final-stage
+    // maps stay hash-based at bench scale; memory per task is the partition
+    // payload either way.
     val objHashFallback = sys.env.getOrElse("SPARK_GRAFT_OBJ_HASH_FALLBACK", "4194304")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -118,9 +112,10 @@ object Bench {
 
     // --- flagship token-throughput (1 warmup + reps, median) ---
     // SPARK_GRAFT_PATHS selects which physical paths to time: "window"
-    // (explode → shuffle → window chain), "grouped" (typed per-doc kernel,
-    // zero shuffle), and/or "regroup" (ungrouped grid → one collect_list
-    // exchange → per-doc kernel — the general-path replacement).
+    // (the flagship job, `flagship` above — the JSON keys keep their
+    // names), "grouped" (typed per-doc kernel, zero shuffle), and/or
+    // "regroup" (ungrouped grid → one exchange → per-doc kernel — the
+    // general-path replacement).
     val paths = sys.env.getOrElse("SPARK_GRAFT_PATHS", "window,grouped,regroup")
       .split(",").map(_.trim).toSet
     val corpusPath = ensureCorpus(spark, nDocs)
@@ -217,25 +212,17 @@ object Bench {
     val gTpts = if (grpTask > 0) tokens / grpTask else 0.0
 
     // --- regroup flagship: ungrouped grid → ONE exchange → per-doc kernel ---
-    // SPARK_GRAFT_REGROUP_IMPL: "sort" (default — groupBy.as.mapGroups,
-    // key-only sort, conf-independent, the faster/stabler route measured
-    // in BENCH.md §regroup) or "agg" (collect_list hash aggregate — 37%
-    // fewer shuffle bytes via map-side list packing, wants the raised
-    // fallback threshold above). SPARK_GRAFT_REGROUP_NPARTS: explicit
-    // exchange partition count ("aqe" = let AQE decide); default = the
-    // session's shuffle partitions, pinning ~4 waves/core so AQE's 64 MB
-    // coalesce target cannot collapse the exchange to one straggler-bound
-    // wave.
+    // SPARK_GRAFT_REGROUP_NPARTS: explicit exchange partition count ("aqe"
+    // = let AQE decide); default = the session's shuffle partitions,
+    // pinning ~4 waves/core so AQE's 64 MB coalesce target cannot collapse
+    // the exchange to one straggler-bound wave.
     val (regroupSec, rgLegs, rShufWrite) = if (paths("regroup")) {
       val rgParts = sys.env.getOrElse("SPARK_GRAFT_REGROUP_NPARTS", shufflePartitions) match {
         case "aqe" => None
         case n => Some(n.toInt)
       }
       val regroupOut = graft.pipeline.FlagshipJob.regroupConsumeAll(
-        spark.read.parquet(corpusPath),
-        preShuffleCompact = sys.env.get("SPARK_GRAFT_PRESHUFFLE").contains("1"),
-        sortImpl = !sys.env.get("SPARK_GRAFT_REGROUP_IMPL").contains("agg"),
-        numPartitions = rgParts)
+        spark.read.parquet(corpusPath), numPartitions = rgParts)
       val writeRg = () => regroupOut.write.mode("overwrite").format("noop").save()
       leg(writeRg) // warmup
       shufWrite.set(0L)

@@ -1,17 +1,14 @@
 package graft
 
-import graft.core.{SyntheticCorpus, TokenAdapter}
-import graft.features.Kinematic
-import graft.session.Sessionize
+import graft.core.SyntheticCorpus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Plan auditor: prints the formatted physical plan of the headline
   * pipelines and asserts the plan-shape invariants that matter at 100 TB.
   *
-  *   - flagship window chain: EXACTLY ONE Exchange before the final agg
-  *     (all 8 features + sessionize share a single hash partitioning + sort;
-  *     the consume-all agg reuses the clustering → no second exchange)
+  *   - flagship kernel: ZERO exchanges, no window; the as-of merge: no
+  *     union, no window; the regroup route: one pinned exchange, key-only sort
   *   - parquet scans show pushed filters / pruned columns where expected
   *   - small sides of contextual joins are broadcast
   *
@@ -46,30 +43,19 @@ object Explain {
     def check(name: String)(cond: Boolean): Unit =
       if (!cond) failures ::= name
 
-    // --- flagship window chain (the exact job Bench times and RunPipeline
-    // ships — one shared definition in FlagshipJob) ---
-    val corpus = SyntheticCorpus.generate(spark, 1000)
-    // default flagship plan (round 6): the input is pre-grouped, so the
+    // --- flagship (the exact job Bench times and RunPipeline ships — one
+    // shared definition in FlagshipJob): the input is pre-grouped, so the
     // zero-shuffle typed kernel is the physical plan — NO exchange, no
-    // sort, no window state anywhere
-    val flagDefault = graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
-    val flagDefaultPlan = flagDefault.queryExecution.executedPlan.toString
-    println("=== flagship default (zero-shuffle per-doc kernel) ===")
-    flagDefault.explain("formatted")
-    val nDefExchanges = "Exchange hashpartitioning".r.findAllIn(flagDefaultPlan).length
-    check(s"flagship default: expected 0 hash exchanges, got $nDefExchanges")(nDefExchanges == 0)
-    check("flagship default: no window operator")(!flagDefaultPlan.contains("Window"))
-    // reference window formulation (semantics reference, unchanged
-    // invariants): exactly one exchange + one sort feeding the fused chain
-    val flag = graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
+    // sort, no window state anywhere. (The window formulation's plan
+    // invariants live with it in FlagshipParitySpec.) ---
+    val corpus = SyntheticCorpus.generate(spark, 1000)
+    val flag = graft.pipeline.FlagshipJob.groupedConsumeAll(corpus)
     val flagPlan = flag.queryExecution.executedPlan.toString
-    println("=== flagship window reference (explode → 8-feature window → sessionize → agg) ===")
+    println("=== flagship (zero-shuffle per-doc kernel) ===")
     flag.explain("formatted")
     val nExchanges = "Exchange hashpartitioning".r.findAllIn(flagPlan).length
-    check(s"flagship: expected 1 hash exchange, got $nExchanges")(nExchanges == 1)
-    val nSorts = "\\bSort \\[".r.findAllIn(flagPlan).length
-    check(s"flagship: expected 1 sort, got $nSorts")(nSorts == 1)
-    check("flagship: window operator present")(flagPlan.contains("Window"))
+    check(s"flagship: expected 0 hash exchanges, got $nExchanges")(nExchanges == 0)
+    check("flagship: no window operator")(!flagPlan.contains("Window"))
 
     // --- filter pushdown into parquet scan ---
     val filtered = SparkEntry.events(spark, sfDir)
@@ -92,50 +78,26 @@ object Explain {
     println("=== visited_location (broadcast equality join) ===")
     check("visited: BroadcastHashJoin used")(visitedPlan.contains("BroadcastHashJoin"))
 
-    // --- as-of join: one exchange over the union, no nested-loop ---
+    // --- as-of join (the plan q_asof_orders runs): the merge exec, no
+    // union, no window state; the forward/nearest directions share the
+    // shape. (The window formulation's plan invariants live with it in
+    // AsOfDirectionsSpec.) ---
     val probe = SparkEntry.events(spark, sfDir).select(col("user_id"), col("ts"), col("event_id"))
     val build = spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
         col("o_orderkey"), col("o_totalprice"))
-    val asof = graft.asof.AsOfJoin.backward(probe, build, "user_id", "ts",
-      Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-    val asofPlan = asof.queryExecution.executedPlan.toString
-    println("=== as-of join (union + cumulative last) ===")
-    val asofExchanges = "Exchange hashpartitioning".r.findAllIn(asofPlan).length
-    check(s"asof: single exchange over the union, got $asofExchanges")(asofExchanges == 1)
-    check("asof: no nested loop")(!asofPlan.contains("NestedLoop"))
-
-    // forward: same one-exchange bound (mirrored DESC sort, cumulative
-    // frame); nearest: one exchange + two cumulative passes
-    val fwdPlan = graft.asof.AsOfJoin.forward(probe, build, "user_id", "ts",
-      Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-      .queryExecution.executedPlan.toString
-    val fwdExchanges = "Exchange hashpartitioning".r.findAllIn(fwdPlan).length
-    check(s"asof forward: single exchange, got $fwdExchanges")(fwdExchanges == 1)
-    val nearPlan = graft.asof.AsOfJoin.nearest(probe, build, "user_id", "ts",
-      Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-      .queryExecution.executedPlan.toString
-    val nearExchanges = "Exchange hashpartitioning".r.findAllIn(nearPlan).length
-    val nearWindows = "\\bWindow \\[".r.findAllIn(nearPlan).length
-    check(s"asof nearest: single exchange, got $nearExchanges")(nearExchanges == 1)
-    // two O(n) cumulative passes (ASC + mirrored DESC), one exchange, no
-    // quadratic unboundedFollowing frame anywhere
-    check(s"asof nearest: TWO cumulative WindowExecs, got $nearWindows")(nearWindows == 2)
-    check("asof nearest: no following-frame aggregate")(!nearPlan.contains("unboundedfollowing$()"))
-
-    // exec directions: the same merge shape (no union, no window state)
-    val fwdMergePlan = graft.asof.AsOfMerge.forward(probe, build, "user_id", "ts",
-      Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-      .queryExecution.executedPlan.toString
-    check("asof forward exec: AsOfMerge planned")(fwdMergePlan.contains("AsOfMerge"))
-    check("asof forward exec: no union, no window")(
-      !fwdMergePlan.contains("Union") && !fwdMergePlan.contains("Window"))
-    val nearMergePlan = graft.asof.AsOfMerge.nearest(probe, build, "user_id", "ts",
-      Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-      .queryExecution.executedPlan.toString
-    check("asof nearest exec: AsOfMerge planned")(nearMergePlan.contains("AsOfMerge"))
-    check("asof nearest exec: no union, no window")(
-      !nearMergePlan.contains("Union") && !nearMergePlan.contains("Window"))
+    println("=== as-of join (co-partitioned streaming merge) ===")
+    for ((direction, join) <- Seq(
+        "backward" -> graft.asof.AsOfMerge.backward _,
+        "forward" -> graft.asof.AsOfMerge.forward _,
+        "nearest" -> graft.asof.AsOfMerge.nearest _)) {
+      val asof = join(probe, build, "user_id", "ts",
+        Seq("o_orderkey", "o_totalprice"), -1.0, Seq("o_orderkey"))
+      val asofPlan = asof.queryExecution.executedPlan.toString
+      check(s"asof $direction: AsOfMerge planned")(asofPlan.contains("AsOfMerge"))
+      check(s"asof $direction: no union, no window")(
+        !asofPlan.contains("Union") && !asofPlan.contains("Window"))
+    }
 
     // --- as-of merge on BUCKETED sides: both exchanges elided ---
     // (the scale advantage of the custom exec: pre-clustered storage layouts
@@ -157,24 +119,12 @@ object Explain {
     println("=== grouped token kernel (must be shuffle-free) ===")
     check("grouped: zero exchanges")(!groupedPlan.contains("Exchange"))
 
-    // --- regroup route (ungrouped general path): exactly ONE exchange,
-    // NO sort, NO window — the collect_list re-group replaces the window
-    // chain's giant sort + 8-frame evaluation (VERDICT r4 #1) ---
-    val regroup = graft.pipeline.FlagshipJob.regroupConsumeAll(corpus.toDF(), sortImpl = false)
-    val regroupPlan = regroup.queryExecution.executedPlan.toString
-    println("=== regroup route (one exchange, no sort, no window) ===")
-    check("regroup: exactly one hash exchange")(
-      "Exchange hashpartitioning".r.findAllIn(regroupPlan).length == 1)
-    check("regroup: no sort")(!regroupPlan.contains("Sort "))
-    check("regroup: no window operator")(!regroupPlan.contains("Window"))
-
-    // --- sort-grouped regroup route (round-5 bench default): one PINNED
-    // exchange (REPARTITION_BY_NUM — AQE cannot coalesce it to a single
+    // --- regroup route (ungrouped general path): one PINNED exchange
+    // (REPARTITION_BY_NUM — AQE cannot coalesce it to a single
     // straggler-bound wave), reused by the group (no second exchange),
-    // key-only sort, no aggregate hash map (no objectHashAggregate
-    // fallback sensitivity), no window
+    // key-only sort, no aggregate hash map, no window
     val regroupSorted = graft.pipeline.FlagshipJob.regroupConsumeAll(
-      corpus.toDF(), sortImpl = true, numPartitions = Some(32))
+      corpus.toDF(), numPartitions = Some(32))
     val rsPlan = regroupSorted.queryExecution.executedPlan.toString
     println("=== sort-grouped regroup route (one pinned exchange, key-only sort) ===")
     check("regroup-sorted: exactly one hash exchange (repartition reused by group)")(

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * plans/r06/<query>_{before,after}.txt evidence the optimization rounds
   * commit. Usage:
   *   sbt "runMain graft.PlanDump <outDir> <suffix> <query1> <query2> ..."
-  * Special names: `flagship` (FlagshipJob.windowConsumeAll on the bench
-  * corpus), `flagship_window_reference`, `flagship_regroup`. */
+  * Special names: `flagship` (FlagshipJob.groupedConsumeAll on the bench
+  * corpus), `flagship_regroup`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
@@ -30,9 +30,7 @@ object PlanDump {
     }
     names.foreach { name =>
       val df = name match {
-        case "flagship" => graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
-        case "flagship_window_reference" =>
-          graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
+        case "flagship" => graft.pipeline.FlagshipJob.groupedConsumeAll(corpus)
         case "flagship_regroup" => graft.pipeline.FlagshipJob.regroupConsumeAll(corpus)
         // the q_stream_asof replay executes eagerly (its returned frame is
         // the collected memory sink), so the evidentiary plan is the

@@ -1,10 +1,8 @@
 package graft
 
 import graft.core.{SyntheticCorpus, TokenAdapter}
-import graft.features.{Kinematic, TokenKernel}
 import graft.pipeline.Pipeline
-import graft.session.Sessionize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline driver (the north rule's spark-submit story): the
@@ -13,11 +11,10 @@ import org.apache.spark.sql.functions._
   * commits per-bucket lineage + observe() metrics and RESUMES from its
   * manifest after a crash.
   *
-  *   sbt -batch "runMain graft.RunPipeline <outRoot> [nDocs] [nBuckets] [path]"
+  *   sbt -batch "runMain graft.RunPipeline <outRoot> [nDocs] [nBuckets]"
   *   # or spark-submit --class graft.RunPipeline <jar> <outRoot> ...
   *
-  * `path` = grouped (default; shuffle-free typed kernel) | window
-  * (explode → fused window chain — the general path for ungrouped input).
+  * Stage 1 runs the shuffle-free flagship kernel (`FlagshipJob.groupedConsumeAll`).
   * Re-running with the same outRoot skips completed buckets (crash-resume);
   * pass a fresh outRoot for a clean run. Exit asserts the token-array
   * round-trip invariant and prints one JSON status line.
@@ -28,7 +25,6 @@ object RunPipeline {
     val outRoot = args.headOption.getOrElse(s"${sys.props("java.io.tmpdir")}/graft_pipeline")
     val nDocs = args.lift(1).map(_.toLong).getOrElse(100000L)
     val nBuckets = args.lift(2).map(_.toInt).getOrElse(16)
-    val pathKind = args.lift(3).getOrElse("grouped")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     val spark = SparkSession.builder()
@@ -44,9 +40,10 @@ object RunPipeline {
     val runner = Pipeline.local(outRoot)
 
     // Resume is only valid against the SAME job config: a manifest written
-    // by a different (nDocs, nBuckets, path) run would silently mix stale
-    // buckets into readStage's glob. Fingerprint and refuse on mismatch.
-    val fingerprint = s"""{"docs":$nDocs,"buckets":$nBuckets,"path":"$pathKind"}"""
+    // by a different (nDocs, nBuckets) run would silently mix stale
+    // buckets into readStage's glob. Fingerprint and refuse on mismatch
+    // (the fixed "path" field keeps earlier out-roots resumable).
+    val fingerprint = s"""{"docs":$nDocs,"buckets":$nBuckets,"path":"grouped"}"""
     val fpPath = java.nio.file.Paths.get(s"$outRoot/_config.json")
     val resumedS1 = runner.completedBuckets("feature_vectors").size
     if (java.nio.file.Files.exists(fpPath)) {
@@ -64,10 +61,8 @@ object RunPipeline {
     val t0 = System.nanoTime()
 
     // stage 1: per-doc feature vectors, bucketed by entity, lineage per bucket
-    val stage1 = runner.runStage("feature_vectors", corpus, "doc_id", nBuckets) { in =>
-      if (pathKind == "grouped") graft.pipeline.FlagshipJob.groupedConsumeAll(in)
-      else graft.pipeline.FlagshipJob.windowConsumeAll(in)
-    }
+    val stage1 = runner.runStage("feature_vectors", corpus, "doc_id", nBuckets)(
+      graft.pipeline.FlagshipJob.groupedConsumeAll)
 
     // stage 2: source-level rollup of stage-1 output (reads committed stage)
     val vectors = runner.readStage(spark, "feature_vectors")
@@ -88,7 +83,7 @@ object RunPipeline {
     val wall = (System.nanoTime() - t0) / 1e9
     val vecRows = runner.readStage(spark, "feature_vectors").count()
     println(
-      s"""{"pipeline":"ok","out":"$outRoot","path":"$pathKind","docs":$nDocs,""" +
+      s"""{"pipeline":"ok","out":"$outRoot","path":"grouped","docs":$nDocs,""" +
         s""""vector_rows":$vecRows,"stage1_buckets_run":${stage1.size},"stage1_buckets_resumed":$resumedS1,""" +
         s""""stage2_buckets_run":${stage2.size},"token_roundtrip_mismatches":$mismatches,"wall_sec":${f"$wall%.1f"}}"""
     )

@@ -1,6 +1,6 @@
 package graft
 
-import graft.asof.AsOfJoin
+import graft.asof.{AsOfBanded, AsOfMerge}
 import graft.core.{Canonical, TrajSchema}
 import graft.features.{Kinematic, Resample, Rolling, Temporal}
 import graft.filters.{Filters, Hampel}
@@ -55,6 +55,23 @@ object SparkEntry {
         (pmod(col("o_orderkey"), lit(7L)) + 1L) * 86400000000L, tsType).as("iv_end"),
       col("o_orderkey"), col("o_totalprice"))
   }
+
+  /** The shape the nine orders-based `q_asof_*` queries share: probe =
+    * events (user_id, ts, event_id), build = orders keyed by customer at
+    * order date with the two order value columns; `join` is the one as-of
+    * operator under test, and the output is the matched order per event. */
+  private def ordersAsOf(sp: SparkSession, dir: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
+    val build = sp.read.parquet(s"$dir/orders.parquet")
+      .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
+        col("o_orderkey"), col("o_totalprice"))
+    join(probe, build)
+      .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
+  }
+
+  private val OrderValues = Seq("o_orderkey", "o_totalprice")
+  private val ByOrderKey = Seq("o_orderkey")
 
   /** Entity grid with exact-arithmetic lat/lon channels (~1° box). */
   def traj(spark: SparkSession, dir: String): DataFrame =
@@ -355,66 +372,31 @@ object SparkEntry {
       Sessionize.byDaysOverlapping(traj(sp, dir), S, 7)
         .select(col("traj_id"), col("event_id"), col("seg_id"))),
 
-    // As-of join — most recent order per user at event time
-    "q_asof_orders" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      AsOfJoin.backward(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // As-of v2 — same semantics through the Catalyst-native merge exec
-    // (AsOfMergeExec): co-partitioned children, streaming merge, no union
-    // sort. Same oracle as q_asof_orders.
-    "q_asof_orders_merge" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      graft.asof.AsOfMerge.backward(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
+    // As-of join — most recent order per user at event time, through the
+    // Catalyst-native merge exec (AsOfMergeExec): co-partitioned children,
+    // streaming merge, no union sort.
+    "q_asof_orders" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfMerge.backward(_, _, "user_id", "ts", OrderValues, buildOrder = ByOrderKey))),
+    // Same call and oracle as q_asof_orders; queries are never dropped or
+    // renamed, so both names stay.
+    "q_asof_orders_merge" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfMerge.backward(_, _, "user_id", "ts", OrderValues, buildOrder = ByOrderKey))),
 
     // As-of banded — whale-entity splitting over (entity, 30-day band)
     // groups with carry-row replication; exact backward semantics, bounded
     // per-task rows. Same oracle as q_asof_orders.
-    "q_asof_orders_banded" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      graft.asof.AsOfBanded.backwardBanded(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), bandSeconds = 30 * 86400.0,
-          buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
+    "q_asof_orders_banded" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfBanded.backwardBanded(_, _, "user_id", "ts", OrderValues,
+        bandSeconds = 30 * 86400.0, buildOrder = ByOrderKey))),
 
     // banded FORWARD/NEAREST — same whale-splitting, mirrored/two-sided
     // carries; same oracles as the unbanded directions
-    "q_asof_forward_banded" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      graft.asof.AsOfBanded.forwardBanded(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), bandSeconds = 30 * 86400.0,
-          buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
-    "q_asof_nearest_banded" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      graft.asof.AsOfBanded.nearestBanded(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), bandSeconds = 30 * 86400.0,
-          buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
+    "q_asof_forward_banded" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfBanded.forwardBanded(_, _, "user_id", "ts", OrderValues,
+        bandSeconds = 30 * 86400.0, buildOrder = ByOrderKey))),
+    "q_asof_nearest_banded" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfBanded.nearestBanded(_, _, "user_id", "ts", OrderValues,
+        bandSeconds = 30 * 86400.0, buildOrder = ByOrderKey))),
 
     // Point-in-interval join — events matched to multi-day order validity
     // windows [orderdate, orderdate + 1..7 days). q_asof_interval is the
@@ -437,49 +419,20 @@ object SparkEntry {
           col("o_orderkey"), col("o_totalprice"))
     }),
 
-    // As-of directions — forward (earliest future-or-equal) and nearest
-    // (min |Δt|, backward wins ties); both one-exchange-one-sort like
-    // backward
-    "q_asof_forward" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      AsOfJoin.forward(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
-    // forward through the custom Catalyst exec (streaming merge on the
-    // mirrored sort) — same oracle as q_asof_forward
-    "q_asof_forward_merge" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      graft.asof.AsOfMerge.forward(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
-    "q_asof_nearest" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      AsOfJoin.nearest(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
-    // nearest through the custom exec: ONE merge pass — backward candidate
-    // retained, forward candidate peeked from the iterator head
-    "q_asof_nearest_merge" -> ((sp, dir) => {
-      val probe = events(sp, dir).select(col("user_id"), col("ts"), col("event_id"))
-      val build = sp.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      graft.asof.AsOfMerge.nearest(probe, build, "user_id", "ts",
-          Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
-        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice"))
-    }),
+    // As-of directions through the same merge exec — forward (earliest
+    // future-or-equal; streaming merge on the mirrored sort) and nearest
+    // (min |Δt|, backward wins ties; ONE merge pass — backward candidate
+    // retained, forward candidate peeked from the iterator head). Each
+    // `_merge` twin runs the same call under the same oracle (both names
+    // stay, like q_asof_orders_merge).
+    "q_asof_forward" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfMerge.forward(_, _, "user_id", "ts", OrderValues, buildOrder = ByOrderKey))),
+    "q_asof_forward_merge" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfMerge.forward(_, _, "user_id", "ts", OrderValues, buildOrder = ByOrderKey))),
+    "q_asof_nearest" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfMerge.nearest(_, _, "user_id", "ts", OrderValues, buildOrder = ByOrderKey))),
+    "q_asof_nearest_merge" -> ((sp, dir) => ordersAsOf(sp, dir)(
+      AsOfMerge.nearest(_, _, "user_id", "ts", OrderValues, buildOrder = ByOrderKey))),
 
     // C1 — visited_location: layer = user 7's distinct points
     "q_ctx_visited" -> ((sp, dir) => {

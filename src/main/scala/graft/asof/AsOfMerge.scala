@@ -1,7 +1,7 @@
 package graft.asof
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
@@ -14,19 +14,20 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
-/** Catalyst-native point-in-time as-of merge — the v2 the north star asks
-  * for ("a Catalyst-native point-in-time as-of merge over range-partitioned,
+/** Catalyst-native point-in-time as-of merge — the engine's one as-of join
+  * ("a Catalyst-native point-in-time as-of merge over range-partitioned,
   * secondary-sorted partitions").
   *
-  * v1 ([[AsOfJoin.backward]]) unions both sides and runs one cumulative
-  * window: correct, built-ins only, but it sorts |probe|+|build| rows as ONE
-  * dataset and carries a null-padded super-schema through the exchange.
-  * This operator plans a dedicated [[AsOfMergeExec]] instead:
+  * The built-ins-only window formulation (union both sides, one cumulative
+  * window) sorts |probe|+|build| rows as ONE dataset and carries a
+  * null-padded super-schema through the exchange; it lives in the test tree
+  * as the semantics reference. This operator plans a dedicated
+  * [[AsOfMergeExec]] instead:
   *
   *   - `requiredChildDistribution` = ClusteredDistribution(entity) on BOTH
   *     children → Catalyst's EnsureRequirements co-partitions them (and
   *     elides an exchange entirely when a side is already hash-clustered —
-  *     the shuffle-avoidance the v1 scaladoc promised);
+  *     the shuffle-avoidance a union formulation can never offer);
   *   - `requiredChildOrdering` = (entity, ts[, tieBreaks]) per side → two
   *     independent (smaller) sorts instead of one union sort;
   *   - execution = one streaming merge pass per co-partition: advance the
@@ -34,15 +35,19 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   *     last build row, emit probe ⋈ match. O(|probe|+|build|) comparisons,
   *     O(1) memory (ONE retained row), no window row-buffering.
   *
-  * Semantics are identical to v1 by construction and by test (AsOfMergeSpec
-  * asserts exceptAll-equality in both directions, incl. tolerance and tie
-  * rules): most recent build.ts ≤ probe.ts per entity, equal timestamps
-  * visible, `buildOrder` breaks equal-ts ties (last wins), null entities
-  * group together (v1's window-partition semantics).
+  * Semantics are identical to the window reference by construction and by
+  * test (AsOfMergeSpec asserts exceptAll-equality in both directions, incl.
+  * tolerance and tie rules): most recent build.ts ≤ probe.ts per entity,
+  * equal timestamps visible, `buildOrder` breaks equal-ts ties (last wins),
+  * null entities group together (window-partition semantics). Null event
+  * times never match.
   */
 object AsOfMerge {
 
-  /** Public API — same signature/semantics as [[AsOfJoin.backward]]. */
+  /** BACKWARD: for each probe row, the most recent same-entity build row
+    * with build.ts ≤ probe.ts (equal ts visible, largest `buildOrder` wins
+    * ties); `toleranceSec` ≥ 0 nulls out matches older than that. Output =
+    * probe columns ++ `asof_ts` ++ `valueCols`. */
   def backward(
       probe: DataFrame,
       build: DataFrame,
@@ -54,11 +59,11 @@ object AsOfMerge {
   ): DataFrame =
     merge(probe, build, entity, ts, valueCols, toleranceSec, buildOrder, Direction.Backward)
 
-  /** FORWARD direction through the same exec — semantics of
-    * [[AsOfJoin.forward]] (earliest build.ts ≥ probe.ts, smallest
-    * buildOrder at the matched ts), cost of the streaming merge: the
-    * children are sorted (entity ASC, ts DESC[, buildOrder DESC]) and the
-    * identical one-retained-row walk runs on the mirrored order. */
+  /** FORWARD direction through the same exec — earliest build.ts ≥
+    * probe.ts, smallest buildOrder at the matched ts — at the cost of the
+    * streaming merge: the children are sorted (entity ASC, ts DESC[,
+    * buildOrder DESC]) and the identical one-retained-row walk runs on the
+    * mirrored order. */
   def forward(
       probe: DataFrame,
       build: DataFrame,
@@ -70,13 +75,12 @@ object AsOfMerge {
   ): DataFrame =
     merge(probe, build, entity, ts, valueCols, toleranceSec, buildOrder, Direction.Forward)
 
-  /** NEAREST direction through the same exec — semantics of
-    * [[AsOfJoin.nearest]] (min |Δt|, backward wins ties, tolerance bounds
-    * both sides) in ONE O(n) merge pass: the walk keeps the backward
-    * candidate as usual, and the FIRST unconsumed build row (the iterator
-    * head — necessarily the same-entity row with the smallest strictly
-    * greater ts, smallest tie-break) is the forward candidate; a per-probe
-    * distance compare picks the closer. */
+  /** NEAREST direction through the same exec — min |Δt|, backward wins
+    * ties, tolerance bounds both sides — in ONE O(n) merge pass: the walk
+    * keeps the backward candidate as usual, and the FIRST unconsumed build
+    * row (the iterator head — necessarily the same-entity row with the
+    * smallest strictly greater ts, smallest tie-break) is the forward
+    * candidate; a per-probe distance compare picks the closer. */
   def nearest(
       probe: DataFrame,
       build: DataFrame,
@@ -100,9 +104,7 @@ object AsOfMerge {
   ): DataFrame = {
     require(!probe.columns.exists(valueCols.contains), "value columns collide with probe columns")
     val spark = probe.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfMergeStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfMergeStrategy
-    }
+    AsOfMergeStrategy.setup(spark)
     // Align key types across sides by WIDENING both to the type the v1
     // union would coerce to (derived by literally unioning one-column
     // projections — the exact same analyzer rule), not by casting build
@@ -187,6 +189,14 @@ case class AsOfMergePlan(
 }
 
 object AsOfMergeStrategy extends SparkStrategy {
+
+  /** Registers this strategy with `spark` once; every [[AsOfMerge]] call
+    * runs it, so any session that builds an [[AsOfMergePlan]] can plan it. */
+  def setup(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(AsOfMergeStrategy)) {
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfMergeStrategy
+    }
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case m: AsOfMergePlan =>
       AsOfMergeExec(

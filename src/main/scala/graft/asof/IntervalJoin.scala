@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * (start ≤ ts < end); among several covering intervals the LATEST start
   * wins (the most specific / most recently opened window — pandas
   * `IntervalIndex.get_indexer`-style), ties at equal start broken by the
-  * LARGEST `buildOrder` (matching [[AsOfJoin.backward]]'s last-wins rule,
+  * LARGEST `buildOrder` (matching [[AsOfMerge.backward]]'s last-wins rule,
   * so the two formulations agree row-for-row wherever both match).
   *
   * Two formulations, both value-checked against the same DuckDB oracle
@@ -63,9 +63,8 @@ object IntervalJoin {
     val build = intervals.select(
       Seq(col(entity), col(startCol).as(ts), col(endCol).as("_iv_end")) ++
         (valueCols ++ buildOrder).distinct.map(col): _*)
-    // through the Catalyst-native merge exec (the repo's documented as-of
-    // default: same semantics as AsOfJoin.backward by AsOfMergeSpec, ~5×
-    // faster, exchange-free over bucketed inputs)
+    // through the Catalyst-native merge exec (the engine's one as-of join:
+    // exchange-free over bucketed inputs)
     val merged = AsOfMerge.backward(probe, build, entity, ts, valueCols :+ "_iv_end", buildOrder = buildOrder)
     val covered = col("asof_ts").isNotNull && Times.micros(col(ts)) < Times.micros(col("_iv_end"))
     merged.select(

@@ -26,13 +26,12 @@ import org.apache.spark.sql.SparkSession
   * intermediate is consumed through joins/aggregates that re-establish
   * their own distribution).
   *
-  * `SPARK_GRAFT_AQE_CACHED=false` restores the stock default. */
+  * The engine sets the flag only when the host session has not set it: an
+  * explicit host setting, `false` included, always wins. */
 object Tuning {
 
-  private val Key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+  private[graft] val Key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
-  def ensureAdaptiveCachedPlans(spark: SparkSession): Unit = {
-    val want = sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "true")
-    if (!spark.conf.getOption(Key).contains(want)) spark.conf.set(Key, want)
-  }
+  def ensureAdaptiveCachedPlans(spark: SparkSession): Unit =
+    if (!spark.conf.getAll.contains(Key)) spark.conf.set(Key, "true")
 }

@@ -50,10 +50,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // physical strategy for the Catalyst-native as-of merge (AsOfMergePlan →
-    // AsOfMergeExec); AsOfMerge.backward also self-registers via
-    // spark.experimental for sessions built without this extension
-    ext.injectPlannerStrategy(_ => graft.asof.AsOfMergeStrategy)
     ext.injectFunction((
       FunctionIdentifier("haversine_m"),
       info("haversine_m", "haversine_m(lat1, lon1, lat2, lon2) - great-circle distance in metres (R=6371 km)"),

@@ -1,9 +1,9 @@
 package graft.features
 
 import graft.core.TokenAdapter
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.functions.{col, collect_list, lit, shiftleft}
+import org.apache.spark.sql.functions.{col, lit, shiftleft}
 
 /** Shuffle-free kinematic+session feature kernel for PRE-GROUPED sequences.
   *
@@ -217,34 +217,53 @@ object TokenKernel {
       .map(r => state.run(r, null))(Encoders.product[DocVector])
   }
 
-  /** Row shape of the packed re-group aggregate: one `(pos << 32) | token`
-    * long per observation (sorted lazily in the kernel). */
-  case class PackedSeqRow(doc_id: String, pt: Array[Long])
+  /** Projection to `(doc_id, packed long)`: one
+    * `(pos << 32) | (token & 0xFFFFFFFF)` long per observation (codegen;
+    * signed packing keeps order correct for negative positions). With
+    * `numPartitions` set, an EXPLICIT hash repartition on doc_id rides
+    * here — the downstream groupBy/mapGroups reuses the partitioning
+    * (still exactly one exchange), and the explicit count
+    * (REPARTITION_BY_NUM origin) is exempt from AQE partition coalescing.
+    * Measured (BENCH.md §regroup): AQE's 64 MB advisory target coalesces
+    * the ~1 GB regroup exchange to ~one task WAVE, serializing whale-doc
+    * stragglers — pinning ~4 waves/core restored 93% task-slot
+    * utilization. Leave None on real clusters unless the same one-wave
+    * pattern appears. */
+  private def packedGrid(
+      grid: DataFrame, docCol: String, posCol: String, tokenCol: String,
+      numPartitions: Option[Int]): DataFrame = {
+    val packed = shiftleft(col(posCol).cast("long"), 32)
+      .bitwiseOR(col(tokenCol).cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
+    val projected = grid.select(col(docCol).cast("string").as("doc_id"), packed.as("_pt"))
+    numPartitions.map(n => projected.repartition(n, col("doc_id"))).getOrElse(projected)
+  }
+
+  /** The packed rows grouped by doc: one exchange on doc_id, then a sort by
+    * the KEY ONLY (8-byte prefix comparisons). */
+  private def groupedPacked(
+      grid: DataFrame, docCol: String, posCol: String, tokenCol: String,
+      numPartitions: Option[Int]): KeyValueGroupedDataset[String, (String, Long)] =
+    packedGrid(grid, docCol, posCol, tokenCol, numPartitions)
+      .groupBy(col("doc_id"))
+      .as[String, (String, Long)](Encoders.STRING, Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
 
   /** UNGROUPED-input fast path (VERDICT r4 #1): per-doc feature vectors
     * over an exploded / evented grid `(doc_id, pos, token)` that is NOT
     * pre-grouped — the general-path replacement for the exploded-grid
-    * 8-frame window chain.
+    * 8-frame window chain. Exchange the packed rows on doc_id, sort each
+    * partition by the key only (not the window chain's multi-column sort),
+    * and stream one doc at a time through the same zero-copy kernel as
+    * [[docVectors]] via `groupBy(col).as[...].mapGroups`. Each doc's
+    * primitive long array is sorted locally (`java.util.Arrays.sort`);
+    * positions must be UNIQUE per doc (same contract as the window path's
+    * total order).
     *
-    * Plan shape: project each row to ONE packed long
-    * `(pos << 32) | (token & 0xFFFFFFFF)` (codegen), hash-aggregate
-    * `collect_list` per doc — partial lists merge map-side, so the single
-    * exchange carries ~8 B/observation and NOTHING is ever sorted by the
-    * engine (no giant external sort, no window frames, no 28-B grid rows).
-    * Each task then sorts its docs' primitive long arrays
-    * (`java.util.Arrays.sort`, dual-pivot on longs — cache-resident for
-    * real doc lengths) and runs the same zero-copy per-doc loop as
-    * [[docVectors]]. Signed packing keeps order correct for negative
-    * positions; positions must be UNIQUE per doc (same contract as the
-    * window path's total order).
-    *
-    * Scale: wall = scan + one token-compact shuffle + O(Σ n log n_doc)
-    * local work with O(doc) memory — the shuffle is the only global
-    * barrier, so efficiency tracks the exchange, not a sort/window stage
-    * (BENCH.md §regroup records the ≥0.8 N→4N sweep). Whale docs bound a
-    * single task at O(n_doc) memory — the same envelope as the window
-    * path's per-partition frame, without the sorter. */
-  def regroupDocVectors(
+    * No aggregate hash map, so no session-conf sensitivity and no per-task
+    * map memory — peak memory is ONE doc's packed array (whale docs bound a
+    * task at O(n_doc), the same envelope as the window path's
+    * per-partition frame). RegroupKernelSpec asserts the route bit-equals
+    * the window path. */
+  def regroupDocVectorsSorted(
       grid: DataFrame,
       stepSec: Long = 1L,
       gapSeconds: Double = 1.5,
@@ -254,10 +273,18 @@ object TokenKernel {
       numPartitions: Option[Int] = None
   ): Dataset[DocVector] = {
     val state = new DocState(stepSec, gapSeconds)
-    regrouped(grid, docCol, posCol, tokenCol, numPartitions).map { r =>
-      val (positions, tokens) = unpack(r.pt)
-      state.run(r.doc_id, tokens, positions, null)
-    }(Encoders.product[DocVector])
+    groupedPacked(grid, docCol, posCol, tokenCol, numPartitions)
+      .mapGroups { (doc, it) =>
+        var arr = new Array[Long](64)
+        var n = 0
+        while (it.hasNext) {
+          if (n == arr.length) arr = java.util.Arrays.copyOf(arr, n << 1)
+          arr(n) = it.next()._2
+          n += 1
+        }
+        val (positions, tokens) = unpack(java.util.Arrays.copyOf(arr, n))
+        state.run(doc, tokens, positions, null)
+      }(Encoders.product[DocVector])
   }
 
   /** Per-token features through the re-group route (parity surface). */
@@ -270,90 +297,12 @@ object TokenKernel {
       tokenCol: String = "token"
   ): Dataset[TokenRow] = {
     val state = new DocState(stepSec, gapSeconds)
-    regrouped(grid, docCol, posCol, tokenCol).flatMap { r =>
-      val (positions, tokens) = unpack(r.pt)
+    groupedPacked(grid, docCol, posCol, tokenCol, None).flatMapGroups { (doc, it) =>
+      val (positions, tokens) = unpack(it.map(_._2).toArray)
       val buf = new scala.collection.mutable.ArrayBuffer[TokenRow](tokens.length)
-      state.run(r.doc_id, tokens, positions, buf += _)
+      state.run(doc, tokens, positions, buf += _)
       buf
     }(Encoders.product[TokenRow])
-  }
-
-  /** One exchange: codegen'd pack → map-side-combined collect_list of
-    * primitive longs.
-    *
-    * CAVEAT (measured, BENCH.md §regroup): collect_list is a
-    * TypedImperativeAggregate, and ObjectHashAggregateExec falls back to
-    * SORT-based aggregation once a task's hash map passes
-    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` keys —
-    * Spark's default is 128, which any re-group over >128 docs/partition
-    * exceeds, silently re-introducing the giant sort this route exists to
-    * avoid (2–3× task-time on the bench corpus). Run it with the
-    * threshold sized to the expected docs/partition, or use
-    * [[regroupDocVectorsSorted]], which needs no session conf. */
-  private def regrouped(
-      grid: DataFrame, docCol: String, posCol: String, tokenCol: String,
-      numPartitions: Option[Int] = None): Dataset[PackedSeqRow] = {
-    packedGrid(grid, docCol, posCol, tokenCol, numPartitions)
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("_pt")).as("pt"))
-      .as(Encoders.product[PackedSeqRow])
-  }
-
-  /** Projection to `(doc_id, packed long)`; with `numPartitions` set, an
-    * EXPLICIT hash repartition on doc_id rides here — the downstream
-    * groupBy/mapGroups reuses the partitioning (still exactly one
-    * exchange), and the explicit count (REPARTITION_BY_NUM origin) is
-    * exempt from AQE partition coalescing. Measured (BENCH.md §regroup):
-    * AQE's 64 MB advisory target coalesces the ~1 GB regroup exchange to
-    * ~one task WAVE, serializing whale-doc stragglers — pinning ~4
-    * waves/core restored 93% task-slot utilization. Leave None on real
-    * clusters unless the same one-wave pattern appears. */
-  private def packedGrid(
-      grid: DataFrame, docCol: String, posCol: String, tokenCol: String,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val packed = shiftleft(col(posCol).cast("long"), 32)
-      .bitwiseOR(col(tokenCol).cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
-    val projected = grid.select(col(docCol).cast("string").as("doc_id"), packed.as("_pt"))
-    numPartitions.map(n => projected.repartition(n, col("doc_id"))).getOrElse(projected)
-  }
-
-  /** UNGROUPED-input fast path, sort-grouped formulation: exchange the
-    * packed rows on doc_id, sort each partition by the KEY ONLY (8-byte
-    * prefix comparisons — not the 8-frame window chain's multi-column
-    * sort), stream one doc at a time through the same zero-copy kernel
-    * via `groupBy(col).as[...].mapGroups`.
-    *
-    * vs [[regroupDocVectors]]: no aggregate hash map, so no
-    * `objectHashAggregate.sortBased.fallbackThreshold` sensitivity and no
-    * per-task map memory — peak memory is ONE doc's packed array (whale
-    * docs bound a task at O(n_doc), same envelope). The engine sort costs
-    * O(rows log rows) per partition but needs no session conf; the agg
-    * formulation is faster when its final map stays hash-based.
-    * RegroupKernelSpec asserts both routes bit-equal the window path. */
-  def regroupDocVectorsSorted(
-      grid: DataFrame,
-      stepSec: Long = 1L,
-      gapSeconds: Double = 1.5,
-      docCol: String = "doc_id",
-      posCol: String = "pos",
-      tokenCol: String = "token",
-      numPartitions: Option[Int] = None
-  ): Dataset[DocVector] = {
-    val state = new DocState(stepSec, gapSeconds)
-    packedGrid(grid, docCol, posCol, tokenCol, numPartitions)
-      .groupBy(col("doc_id"))
-      .as[String, (String, Long)](Encoders.STRING, Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .mapGroups { (doc, it) =>
-        var arr = new Array[Long](64)
-        var n = 0
-        while (it.hasNext) {
-          if (n == arr.length) arr = java.util.Arrays.copyOf(arr, n << 1)
-          arr(n) = it.next()._2
-          n += 1
-        }
-        val (positions, tokens) = unpack(java.util.Arrays.copyOf(arr, n))
-        state.run(doc, tokens, positions, null)
-      }(Encoders.product[DocVector])
   }
 
   /** Sort the packed array (signed long order = (pos, token-unsigned)

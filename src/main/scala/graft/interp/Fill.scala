@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Gap backfill WITHOUT synthesizing rows: last/next-observation-carried
   * within an entity — the point-in-time companion to
   * [[Interpolation]] (which inserts rows) and the windowed sibling of
-  * [[graft.asof.AsOfJoin]] (which carries values across FRAMES; this
+  * [[graft.asof.AsOfMerge]] (which carries values across FRAMES; this
   * carries across null slots inside one frame). The reference reaches the
   * same effect through pandas `ffill` on its per-trajectory frames
   * (PTRAIL preprocessing assumes dense frames; see

@@ -1,95 +1,38 @@
 package graft.pipeline
 
 import graft.core.TokenAdapter
-import graft.features.Kinematic
-import graft.session.Sessionize
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** THE flagship job, defined once (Bench times it, Explain audits its plan,
-  * RunPipeline ships it): tokenized sequences → fused 8-feature kinematic
-  * window chain → gap sessionize → consume-all per-doc aggregate (every
-  * feature summed so column pruning cannot drop any of the work).
+  * RunPipeline ships it): tokenized sequences → 8 kinematic features → gap
+  * sessionize → consume-all per-doc vector (every feature summed so column
+  * pruning cannot drop any of the work).
   *
-  * `preShuffleCompact` hash-clusters the SEQUENCE rows before the explode
-  * (~4 B/token through the exchange instead of ~28 B; GenerateExec
-  * preserves the partitioning so the window plans no second exchange) —
-  * the cluster-scale default, measured in BENCH.md. */
+  * The semantics are those of the window formulation (explode → fused
+  * kinematic window chain → `Sessionize.byGap` → per-doc aggregate), which
+  * lives in the test tree as the parity reference: FlagshipParitySpec
+  * asserts both entry points below produce its rows. */
 object FlagshipJob {
 
   val GapSeconds = 1.5
 
-  /** Output column order of the original window formulation — every
-    * flagship implementation must present this exact schema. */
-  private val ConsumeAllColumns: Seq[String] =
-    "doc_id" +: Kinematic.AllFeatures.map(f => s"sum_$f") :+ "n_sessions" :+ "n"
-
-  /** The flagship consume-all job. The INPUT is the pre-grouped
-    * tokenized-sequence table (one entity per row, observations in order),
-    * so the optimal physical plan is the zero-shuffle typed kernel
+  /** The flagship consume-all job over the pre-grouped tokenized-sequence
+    * table (one entity per row, observations in order). The optimal plan
+    * is the zero-shuffle typed kernel
     * ([[graft.features.TokenKernel.docVectors]]) — re-grouping what the
     * storage layout already groups is pure overhead (optimization guide
-    * §2.4/§8: use what you know that the optimizer does not). The window
-    * formulation that round 1 shipped is retained verbatim below
-    * ([[windowReferenceConsumeAll]]) as the semantics reference and stays
-    * selectable via `SPARK_GRAFT_FLAGSHIP_IMPL=window` (or `regroup` for
-    * the one-exchange general-path route). FlagshipParitySpec asserts all
-    * three produce the same rows in the same schema.
-    *
-    * `preShuffleCompact` only affects the exchange-bearing impls (the
-    * default kernel plan has no exchange at all). */
-  def windowConsumeAll(corpus: DataFrame, preShuffleCompact: Boolean = true): DataFrame =
-    sys.env.getOrElse("SPARK_GRAFT_FLAGSHIP_IMPL", "grouped") match {
-      case "window" => windowReferenceConsumeAll(corpus, preShuffleCompact)
-      case "regroup" =>
-        regroupConsumeAll(corpus, preShuffleCompact = preShuffleCompact)
-          .select(ConsumeAllColumns.map(col): _*)
-      case _ =>
-        graft.features.TokenKernel.docVectors(corpus, stepSec = 1L, gapSeconds = GapSeconds)
-          .toDF().select(ConsumeAllColumns.map(col): _*)
-    }
-
-  /** Round-1 window formulation, unchanged: explode → one exchange + sort →
-    * fused 8-feature window chain → gap sessionize → consume-all agg.
-    * Semantics reference for the parity specs and the Explain plan gate. */
-  def windowReferenceConsumeAll(corpus: DataFrame, preShuffleCompact: Boolean = true): DataFrame = {
-    val clustered = if (preShuffleCompact) corpus.repartition(col("doc_id")) else corpus
-    val (grid, ts) = TokenAdapter.explodeTokens(clustered)
-    val ses = Sessionize.byGap(Kinematic.withKinematics(grid, ts), ts, GapSeconds)
-    val aggs = Kinematic.AllFeatures.map(f => sum(col(f)).as(s"sum_$f")) :+
-      max(col("session_id")).as("n_sessions") :+ count(lit(1)).as("n")
-    ses.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Same result through the shuffle-free typed kernel (pre-grouped path;
-    * TokenKernelSpec proves equality). */
+    * §2.4/§8: use what you know that the optimizer does not). */
   def groupedConsumeAll(corpus: DataFrame): DataFrame =
     graft.features.TokenKernel.docVectors(corpus, stepSec = 1L, gapSeconds = GapSeconds).toDF()
 
   /** Same result over the UNGROUPED grid through the re-group route
-    * (VERDICT r4 #1): explode (narrow) → one packed-long collect_list
-    * exchange → per-doc kernel. No sort, no window frames — the
-    * general-path replacement when the input is not pre-grouped.
-    * `preShuffleCompact` mirrors [[windowConsumeAll]]'s A/B knob: cluster
-    * the compact SEQUENCE rows first so the explode + re-group aggregate
-    * plan NO further exchange (GenerateExec preserves partitioning). */
-  def regroupConsumeAll(
-      corpus: DataFrame,
-      preShuffleCompact: Boolean = false,
-      // sort-grouped is the DEFAULT: conf-independent (no
-      // objectHashAggregate fallback-threshold sensitivity), measured
-      // faster and stabler (BENCH.md §Round 5); the collect_list agg
-      // route is the opt-in for network-constrained clusters (37% fewer
-      // shuffle bytes via map-side list packing)
-      sortImpl: Boolean = true,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val clustered = if (preShuffleCompact) corpus.repartition(col("doc_id")) else corpus
-    val (grid, _) = TokenAdapter.explodeTokens(clustered)
-    if (sortImpl)
-      graft.features.TokenKernel.regroupDocVectorsSorted(
-        grid, stepSec = 1L, gapSeconds = GapSeconds, numPartitions = numPartitions).toDF()
-    else
-      graft.features.TokenKernel.regroupDocVectors(
-        grid, stepSec = 1L, gapSeconds = GapSeconds, numPartitions = numPartitions).toDF()
+    * (VERDICT r4 #1): explode (narrow) → one exchange on doc_id, key-only
+    * sort → per-doc kernel. No window frames — the general-path
+    * replacement when the input is not pre-grouped. `numPartitions` pins
+    * the exchange width (see `TokenKernel.regroupDocVectorsSorted`). */
+  def regroupConsumeAll(corpus: DataFrame, numPartitions: Option[Int] = None): DataFrame = {
+    val (grid, _) = TokenAdapter.explodeTokens(corpus)
+    graft.features.TokenKernel.regroupDocVectorsSorted(
+      grid, stepSec = 1L, gapSeconds = GapSeconds, numPartitions = numPartitions).toDF()
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 import org.slf4j.LoggerFactory
 
 /** Streaming point-in-time enrichment: attach the most recent build-side
-  * row (build.ts ≤ event.ts, [[graft.asof.AsOfJoin.backward]] semantics
+  * row (build.ts ≤ event.ts, [[graft.asof.AsOfMerge.backward]] semantics
   * including the equal-ts-visible and largest-buildOrder tie rules) to an
   * UNBOUNDED stream of events — the online half of the as-of family
   * (feature lookup at serving/ingest time against a point-in-time table).
@@ -54,7 +54,8 @@ import org.slf4j.LoggerFactory
   *    O(keepLastN), not O(|history|).
   *
   * Works identically on a batch DataFrame (all ops are standard) —
-  * StreamAsOfSpec asserts exceptAll-equality with AsOfJoin.backward.
+  * StreamAsOfSpec asserts exceptAll-equality with the window-formulation
+  * as-of reference in the test tree.
   *
   * Output: stream columns + `asof_ts` + `valueCols` (null when no kept
   * build row at-or-before the event, or the event time is null). */

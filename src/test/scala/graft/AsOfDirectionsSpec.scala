@@ -80,4 +80,30 @@ class AsOfDirectionsSpec extends SparkSpec {
     assert(got(2L) == null)                         // both 30m away > 25m tolerance
     assert(got(3L) == "2024-01-01 11:00:00.0")      // 20m future within tolerance
   }
+
+  // the window formulation's plan shape: one hash exchange over the tagged
+  // union, cumulative frames only
+  private def windowPlans = {
+    val (probe, build) = fix
+    Seq("backward" -> AsOfJoin.backward _, "forward" -> AsOfJoin.forward _, "nearest" -> AsOfJoin.nearest _)
+      .map { case (dir, join) =>
+        dir -> join(probe, build, "entity", "ts", Seq("k", "v"), -1.0, Seq("k"))
+          .queryExecution.executedPlan.toString
+      }.toMap
+  }
+
+  test("window formulation plans ONE exchange over the union in every direction, no nested loop") {
+    for ((dir, plan) <- windowPlans) {
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+      assert(exchanges == 1, s"$dir: expected a single exchange, got $exchanges:\n$plan")
+      assert(!plan.contains("NestedLoop"), s"$dir: nested loop in:\n$plan")
+    }
+  }
+
+  test("window formulation nearest: exactly two cumulative Windows, no following-frame aggregate") {
+    val plan = windowPlans("nearest")
+    val windows = "\\bWindow \\[".r.findAllIn(plan).length
+    assert(windows == 2, s"expected TWO cumulative WindowExecs, got $windows:\n$plan")
+    assert(!plan.contains("unboundedfollowing$()"), plan)
+  }
 }

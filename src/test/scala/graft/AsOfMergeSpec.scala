@@ -1,6 +1,6 @@
 package graft
 
-import graft.asof.{AsOfJoin, AsOfMerge}
+import graft.asof.{AsOfJoin, AsOfMerge, AsOfMergeStrategy}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -235,5 +235,11 @@ class AsOfMergeSpec extends SparkSpec {
       assert(graft.asof.AsOfMergeExec.skewWarningCount.get() == mid,
         "balanced run must not warn at the default-scale threshold")
     } finally spark.conf.unset(graft.asof.AsOfMergeExec.SkewWarnRowsKey)
+  }
+
+  test("the merge strategy is registered once per session, however many merges run") {
+    AsOfMerge.backward(probeDf, buildDf, "entity", "ts", Seq("bid", "v"))
+    AsOfMerge.nearest(probeDf, buildDf, "entity", "ts", Seq("bid", "v"))
+    assert(spark.sessionState.planner.strategies.count(_ eq AsOfMergeStrategy) == 1)
   }
 }

@@ -5,16 +5,15 @@ import graft.features.Kinematic
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-6 optimization guard: `FlagshipJob.windowConsumeAll` now plans the
-  * zero-shuffle per-doc kernel by default (the corpus input is pre-grouped,
-  * so the explode→exchange→window chain re-derived a grouping the storage
-  * already had). The REFERENCE window formulation is retained verbatim
-  * (`windowReferenceConsumeAll`), and this spec pins the optimization's
-  * correctness contract: same schema (names, order), same doc set, and the
-  * same values — n / n_sessions exactly, the float sums within the same
-  * tolerance discipline TokenKernelSpec uses (identical accumulation order
-  * ⇒ near-bit-equal; the tolerance only absorbs partial-aggregate merge
-  * order in the reference plan). */
+/** Flagship correctness contract: both `FlagshipJob` entry points — the
+  * zero-shuffle per-doc kernel (`groupedConsumeAll`) and the one-exchange
+  * regroup route (`regroupConsumeAll`) — produce the rows of the window
+  * formulation (`FlagshipReference.windowReferenceConsumeAll`): same doc
+  * set, n / n_sessions exactly, the float sums within the same tolerance
+  * discipline TokenKernelSpec uses (identical accumulation order ⇒
+  * near-bit-equal; the tolerance only absorbs partial-aggregate merge order
+  * in the reference plan). The reference's own plan shape is pinned here
+  * too. */
 class FlagshipParitySpec extends SparkSpec {
 
   private lazy val corpus = {
@@ -47,26 +46,35 @@ class FlagshipParitySpec extends SparkSpec {
     }
   }
 
+  private def reference(df: DataFrame) = graft.pipeline.FlagshipReference.windowReferenceConsumeAll(df)
+
+  /** `df` with its columns in the reference formulation's order. */
+  private def inReferenceOrder(df: DataFrame) =
+    df.select(reference(corpus).columns.toIndexedSeq.map(col): _*)
+
   test("default flagship (kernel) == reference window formulation") {
-    assert(sys.env.get("SPARK_GRAFT_FLAGSHIP_IMPL").forall(_ == "grouped"),
-      "spec must run with the default impl selection")
-    val default = graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
-    val reference = graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
-    assertConsumeAllEqual(default, reference, "kernel vs window reference")
+    val kernel = inReferenceOrder(graft.pipeline.FlagshipJob.groupedConsumeAll(corpus))
+    assertConsumeAllEqual(kernel, reference(corpus), "kernel vs window reference")
   }
 
   test("default flagship plan is shuffle-free (no exchange, no window)") {
-    val plan = graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
+    val plan = graft.pipeline.FlagshipJob.groupedConsumeAll(corpus)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"), s"unexpected exchange in:\n$plan")
     assert(!plan.contains("Window"), s"unexpected window operator in:\n$plan")
   }
 
   test("regroup impl column selection == reference window formulation") {
-    val regroup = graft.pipeline.FlagshipJob
-      .regroupConsumeAll(corpus)
-      .select(graft.pipeline.FlagshipJob.windowConsumeAll(corpus).columns.toIndexedSeq.map(col): _*)
-    val reference = graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
-    assertConsumeAllEqual(regroup, reference, "regroup vs window reference")
+    val regroup = inReferenceOrder(graft.pipeline.FlagshipJob.regroupConsumeAll(corpus))
+    assertConsumeAllEqual(regroup, reference(corpus), "regroup vs window reference")
+  }
+
+  test("window reference plan: one exchange, one sort feeding the fused chain, a Window") {
+    val plan = reference(SyntheticCorpus.generate(spark, 1000)).queryExecution.executedPlan.toString
+    val nExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+    assert(nExchanges == 1, s"expected 1 hash exchange, got $nExchanges:\n$plan")
+    val nSorts = "\\bSort \\[".r.findAllIn(plan).length
+    assert(nSorts == 1, s"expected 1 sort, got $nSorts:\n$plan")
+    assert(plan.contains("Window"), s"window operator missing:\n$plan")
   }
 }

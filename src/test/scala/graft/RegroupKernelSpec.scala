@@ -5,7 +5,7 @@ import graft.features.{Kinematic, TokenKernel}
 import graft.session.Sessionize
 import org.apache.spark.sql.functions._
 
-/** The re-group route (ungrouped grid → one collect_list exchange →
+/** The re-group route (ungrouped grid → one exchange + key-only sort →
   * per-doc kernel; VERDICT r4 #1) must equal the declarative window path
   * BIT-FOR-BIT — including on SPARSE grids (missing positions), where the
   * per-step Δt and session-boundary logic has to reproduce the window
@@ -66,7 +66,7 @@ class RegroupKernelSpec extends SparkSpec {
     val aggs = Kinematic.AllFeatures.map(f => sum(col(f)).as(s"sum_$f")) :+
       max(col("session_id")).as("n_sessions") :+ count(lit(1)).as("n")
     val win = ses.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val ker = TokenKernel.regroupDocVectors(grid).toDF()
+    val ker = TokenKernel.regroupDocVectorsSorted(grid).toDF()
     val joined = win.alias("w").join(ker.alias("k"), Seq("doc_id"), "full")
     assert(joined.count() == win.count() && win.count() == ker.count())
     assert(joined.where(
@@ -89,11 +89,6 @@ class RegroupKernelSpec extends SparkSpec {
       max(col("session_id")).as("n_sessions") :+ count(lit(1)).as("n")
     val win = ses.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
     val ker = TokenKernel.regroupDocVectorsSorted(grid).toDF()
-    // the two regroup formulations must agree EXACTLY (same kernel, same
-    // per-doc sorted traversal — only the grouping machinery differs)
-    val agg = TokenKernel.regroupDocVectors(grid).toDF()
-    assert(agg.exceptAll(ker).count() == 0 && ker.exceptAll(agg).count() == 0,
-      "agg-grouped and sort-grouped regroup routes diverge")
     val joined = win.alias("w").join(ker.alias("k"), Seq("doc_id"), "full")
     assert(joined.count() == win.count() && win.count() == ker.count())
     assert(joined.where(
@@ -115,24 +110,13 @@ class RegroupKernelSpec extends SparkSpec {
 
   test("explicit numPartitions: STILL one exchange (groupBy reuses the repartition), count pinned") {
     val (grid, _) = TokenAdapter.explodeTokens(corpus)
-    for (ds <- Seq(
-        TokenKernel.regroupDocVectorsSorted(grid, numPartitions = Some(7)),
-        TokenKernel.regroupDocVectors(grid, numPartitions = Some(7)))) {
-      val plan = ds.queryExecution.executedPlan.toString
-      assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
-        s"explicit repartition must be REUSED by the group, not doubled:\n$plan")
-      assert(plan.contains("hashpartitioning(doc_id"), plan)
-      // REPARTITION_BY_NUM origin: AQE must not coalesce the pinned count
-      assert(ds.rdd.getNumPartitions == 7, s"expected 7 pinned partitions, got ${ds.rdd.getNumPartitions}")
-    }
-  }
-
-  test("regroup plan: ONE exchange, ZERO sorts, ZERO window operators") {
-    val (grid, _) = TokenAdapter.explodeTokens(corpus)
-    val plan = TokenKernel.regroupDocVectors(grid).queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, plan)
-    assert(!plan.contains("Sort "), s"regroup plan must not sort:\n$plan")
-    assert(!plan.contains("Window"), s"regroup plan must not window:\n$plan")
+    val ds = TokenKernel.regroupDocVectorsSorted(grid, numPartitions = Some(7))
+    val plan = ds.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
+      s"explicit repartition must be REUSED by the group, not doubled:\n$plan")
+    assert(plan.contains("hashpartitioning(doc_id"), plan)
+    // REPARTITION_BY_NUM origin: AQE must not coalesce the pinned count
+    assert(ds.rdd.getNumPartitions == 7, s"expected 7 pinned partitions, got ${ds.rdd.getNumPartitions}")
   }
 
   test("WHALE doc (VERDICT r5 #4): one multi-million-token doc among small docs " +

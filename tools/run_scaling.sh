@@ -4,9 +4,10 @@
 # at both + efficiency T_{4N}/(4·T_N). Run from /root/repo.
 #
 # Three physical paths are swept:
-#   window  — explode → shuffle → fused window chain (semantics reference)
+#   window  — the flagship job (FlagshipJob.groupedConsumeAll; the path
+#             name is Bench's JSON key)
 #   grouped — typed per-doc kernel, zero shuffle (pre-grouped scale path)
-#   regroup — ungrouped grid → ONE collect_list exchange → per-doc kernel
+#   regroup — ungrouped grid → ONE exchange, key-only sort → per-doc kernel
 #             (the general-path replacement for the window chain)
 # Sizes differ so each run lands in a stable 3–60 s measurement band.
 set -eo pipefail
