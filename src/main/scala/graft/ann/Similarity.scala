@@ -70,33 +70,14 @@ object Similarity {
     GraftSqlBridge.column(LshBucketExpr(GraftSqlBridge.expression(vec), planes))
   }
 
-  /** Declarative HOF formulation of [[lshBucket]] — kept as the parity
-    * reference (LshBucketParitySpec asserts bit-equality with the kernel). */
-  def lshBucketHof(vec: Column, planes: Int): Column = {
-    val P = graft.functions.TextHash.P
-    val bits = (0 until planes).map { p =>
-      val a = lit(506952114L * (2 * p + 1) % P)
-      val b = lit((40503L * (p + 1)) % P)
-      val s = aggregate(
-        zip_with(vec, sequence(lit(1), size(vec)), (x, i) => {
-          val h = (i.cast("long") * 506952114L % P * a % P + b) % P
-          x.cast("double") * (h.cast("double") / 2147483647.0 - 0.5)
-        }),
-        lit(0.0),
-        (acc, v) => acc + v
-      )
-      when(s > 0.0, 1L << p).otherwise(0L)
-    }
-    bits.reduce(_ + _)
-  }
-
   def lshBuckets(df: DataFrame, planes: Int = 8, id: String = "vec_id", vec: String = "embedding"): DataFrame =
     df.withColumn("bucket", lshBucket(col(vec), planes))
 
   /** Per-plane projection sum of `vec` onto portable hyperplane `p` — the
-    * signed quantity whose sign is bucket bit p ([[lshBucketHof]] inlines
-    * the same arithmetic). Used on the QUERY side only (broadcast-sized),
-    * where the interpreted HOF cost is irrelevant. */
+    * signed quantity whose sign is bucket bit p (the tests' declarative
+    * reference, `SimilarityReference`, inlines the same arithmetic). Used on
+    * the QUERY side only (broadcast-sized), where the interpreted
+    * higher-order-function cost is irrelevant. */
   private def lshPlaneSum(vec: Column, p: Int): Column = {
     val P = graft.functions.TextHash.P
     val a = lit(506952114L * (2 * p + 1) % P)

@@ -39,7 +39,8 @@ object SimilarityKernel {
     * 2³¹−1, mapped to [−0.5, 0.5)), so the DuckDB oracle reproduces buckets
     * bit-for-bit — unlike the earlier xxhash64-seeded planes. Per-plane fold
     * order is element-ascending, matching the HOF formulation
-    * ([[Similarity.lshBucketHof]]) and the SQL list_reduce mirror exactly.
+    * (`SimilarityReference` in the tests) and the SQL list_reduce mirror
+    * exactly.
     * Arrays containing a null element hash to bucket 0 (the HOF's
     * null-poisoned sums fail every `> 0` test). */
   /** Per-plane affine multipliers/offsets — derived once per expression

@@ -116,7 +116,7 @@ object Dedup {
     // again. The hint keeps the exchange-honoring merge join, which is the
     // only feasible strategy at corpus scale anyway: an inverted index
     // never fits a broadcast.)
-    val nParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val invP = inv.repartition(nParts, col("sh"))
     val a = invP.select(col("_id").as("id_a"), col("sh"))
     val b = invP.select(col("_id").as("id_b"), col("sh"))

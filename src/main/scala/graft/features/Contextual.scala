@@ -109,17 +109,22 @@ object Contextual {
 
   /** Ray-casting point-in-polygon as a pure Column expression (crossing
     * number over the edge list). `polygon` is a Seq of (lat, lon) vertices
-    * (closed implicitly). Broadcast as literals — zero shuffle. */
+    * (closed implicitly). Broadcast as literals — zero shuffle. A
+    * horizontal edge (`yi == yj`) can never straddle `lat`, so it adds no
+    * crossing term. */
   def pointInPolygon(lat: Column, lon: Column, polygon: Seq[(Double, Double)]): Column = {
     val n = polygon.length
-    val crossings = (0 until n).map { i =>
+    val crossings = (0 until n).flatMap { i =>
       val (yi, xi) = polygon(i)
       val (yj, xj) = polygon((i + 1) % n)
-      val cond = (lit(yi) > lat) =!= (lit(yj) > lat)
-      val xCross = lit(xj - xi) * (lat - yi) / lit(yj - yi) + xi
-      when(cond && lon < xCross, 1).otherwise(0)
+      Option.when(yi != yj) {
+        val cond = (lit(yi) > lat) =!= (lit(yj) > lat)
+        val xCross = lit(xj - xi) * (lat - yi) / lit(yj - yi) + xi
+        when(cond && lon < xCross, 1).otherwise(0)
+      }
     }
-    pmod(crossings.reduce(_ + _), lit(2)) === 1
+    if (crossings.isEmpty) lit(false)
+    else pmod(crossings.reduce(_ + _), lit(2)) === 1
   }
 
   /** C3 — trajectories_inside_polygon (contextual_features.py:186-228):
@@ -160,8 +165,4 @@ object Conversions {
     when(upper(trim(c)).endsWith("E"), num)
       .otherwise(when(neg < -180.0, neg + 360).otherwise(neg))
   }
-
-  def convertDirectionsToDegreeLatLon(df: DataFrame, latCol: String, lonCol: String): DataFrame =
-    df.withColumn(latCol, parseLat(col(latCol)))
-      .withColumn(lonCol, parseLon(col(lonCol)))
 }

@@ -68,11 +68,6 @@ object Kinematic {
   def withDistanceFromPoint(df: DataFrame, s: TrajSchema, lat: Double, lon: Double): DataFrame =
     df.withColumn(s"Distance_from_($lat, $lon)", Geo.haversine(lit(lat), lit(lon), s.latCol, s.lonCol))
 
-  /** K4 — boolean within-range of a coordinate (kinematic_features.py:328-371);
-    * reference column name `Within_{d}_m`. */
-  def withPointWithinRange(df: DataFrame, s: TrajSchema, lat: Double, lon: Double, rangeM: Double): DataFrame =
-    df.withColumn(s"Within_${rangeM}_m", Geo.haversine(lit(lat), lit(lon), s.latCol, s.lonCol) <= rangeM)
-
   /** K5 — Speed = Distance/Δt m/s (kinematic_features.py:415-481). The
     * reference diffs the globally-sorted frame so entity boundaries are only
     * saved by NaN poisoning; per-entity lag is boundary-correct by
@@ -202,73 +197,6 @@ object Kinematic {
       Geo.infToNull((col("_br0") - col("_br1")) / col("_dt0")).as(RateOfBearingRate)): _*)
   }
 
-  /** K11 at skew scale — banded/salted evaluation for oversized entities.
-    *
-    * A single entity with ~10^9 rows would otherwise sort in one window task.
-    * Requires a 0-based dense position column `pos` (token domain always has
-    * one). Rows are banded by `floor(pos / bandRows)`; each band is prepended
-    * with the last `overlap` rows of its predecessor (lag-k context, k ≤ 3
-    * for the kinematic chain) so results are EXACTLY equal to the unsalted
-    * plan — verified by KinematicSpec's salted-equality property. Entity
-    * firsts (for Distance_from_start) are a tiny per-entity aggregate joined
-    * back (auto-broadcast under AQE when small).
-    */
-  def withKinematicsSalted(
-      df: DataFrame,
-      s: TrajSchema,
-      pos: String,
-      bandRows: Int = 1 << 20,
-      overlap: Int = 3
-  ): DataFrame = {
-    require(bandRows > overlap, "bandRows must exceed overlap")
-    val band = floor(col(pos) / bandRows)
-    // Context copies: last `overlap` rows of band b re-emitted into band b+1.
-    val own = df.withColumn("_band", band).withColumn("_ctx", lit(false))
-    val ctx = df
-      .where(pmod(col(pos), lit(bandRows)) >= bandRows - overlap)
-      .withColumn("_band", band + 1)
-      .withColumn("_ctx", lit(true))
-    val banded = own.unionByName(ctx)
-    val sb = s.copy(orderCols = s.orderCols) // ordering unchanged; partition key gains _band
-    val wB = Window.partitionBy(s.idCol, col("_band")).orderBy(sb.ordering: _*)
-
-    val dt = (graft.core.Times.micros(s.tsCol) - lag(graft.core.Times.micros(s.tsCol), 1).over(wB)).cast("double") / 1e6
-    val dist = Geo.haversine(lag(s.latCol, 1).over(wB), lag(s.lonCol, 1).over(wB), s.latCol, s.lonCol)
-    val brg = Geo.bearing(lag(s.latCol, 1).over(wB), lag(s.lonCol, 1).over(wB), s.latCol, s.lonCol)
-
-    val firsts = df
-      .groupBy(s.idCol)
-      .agg(
-        min_by(s.latCol, col(pos)).as("_lat0"),
-        min_by(s.lonCol, col(pos)).as("_lon0")
-      )
-
-    val step1 = banded
-      .withColumn(Distance, dist)
-      .withColumn(Bearing, brg)
-      .withColumn("_dt", dt)
-    val step2 = step1
-      .withColumn(Speed, Geo.infToNull(col(Distance) / col("_dt")))
-      .withColumn(BearingRate, Geo.infToNull((col(Bearing) - lag(col(Bearing), 1).over(wB)) / col("_dt")))
-    val step3 = step2
-      .withColumn(Acceleration, Geo.infToNull((col(Speed) - lag(col(Speed), 1).over(wB)) / col("_dt")))
-    val step4 = step3
-      .withColumn(Jerk, Geo.infToNull((col(Acceleration) - lag(col(Acceleration), 1).over(wB)) / col("_dt")))
-      .withColumn(
-        RateOfBearingRate,
-        Geo.infToNull((col(BearingRate) - lag(col(BearingRate), 1).over(wB)) / col("_dt"))
-      )
-    step4
-      .where(!col("_ctx"))
-      .join(firsts, Seq(s.id))
-      .withColumn(
-        DistanceFromStart,
-        when(col(pos) === 0, lit(null).cast("double"))
-          .otherwise(Geo.haversine(col("_lat0"), col("_lon0"), s.latCol, s.lonCol))
-      )
-      .drop("_band", "_ctx", "_dt", "_lat0", "_lon0")
-  }
-
   /** K12 — global bounding box (kinematic_features.py:37-59). */
   def boundingBox(df: DataFrame, s: TrajSchema): DataFrame =
     df.agg(
@@ -297,14 +225,6 @@ object Kinematic {
     val base = if (df.columns.contains(Distance)) df else withDistance(df, s)
     base.groupBy(s.idCol).agg(sum(col(Distance)).as("distance_travelled"))
   }
-
-  /** K14 — distance travelled by one entity on one date
-    * (kinematic_features.py:275-326). */
-  def distanceTravelledByDate(df: DataFrame, s: TrajSchema, id: String, date: String): DataFrame =
-    distanceTravelled(
-      df.where(s.idCol === id && to_date(s.tsCol) === to_date(lit(date))),
-      s
-    )
 
   /** K16 — number of distinct (lat, lon) locations per entity
     * (kinematic_features.py:804-850). Exact; swap to approx_count_distinct

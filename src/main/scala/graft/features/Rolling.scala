@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * row-bounded sliding windows over the same window spec (one WindowExec,
   * buffer bounded by k — no whole-partition frames); every aggregate here
   * is whole-stage-friendly and the projection prunes to (keys, value)
-  * before the exchange. Skewed whale entities: same banding remedy as the
-  * kinematic windows ([[Kinematic.withKinematicsSalted]]). */
+  * before the exchange. */
 object Rolling {
 
   /** Adds `roll_n`, `roll_min`, `roll_max`, `roll_mean`, `roll_rate_hz`

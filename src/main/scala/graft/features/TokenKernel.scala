@@ -1,6 +1,7 @@
 package graft.features
 
 import graft.core.TokenAdapter
+import graft.kernels.Geo
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions.{col, lit, shiftleft}
@@ -23,8 +24,8 @@ import org.apache.spark.sql.functions.{col, lit, shiftleft}
   *
   * Exactness contract: every arithmetic step mirrors the declarative plan
   * op-for-op — `xxhash64` via catalyst's XXH64 with Spark's literal-fold
-  * order, haversine/bearing in [[graft.kernels.Geo]]'s operation order
-  * (java.lang.Math == Spark codegen's runtime), Δt through the same
+  * order, haversine/bearing through [[graft.kernels.Geo]]'s scalars (the
+  * functions the declarative plan calls), Δt through the same
   * micros-long → double division. TokenKernelSpec asserts BIT-EQUALITY of
   * every feature against the window path on the synthetic corpus.
   *
@@ -75,7 +76,6 @@ object TokenKernel {
   )
 
   private val SparkHashSeed = 42L
-  private val EarthR = graft.kernels.Geo.EarthRadiusMeters
 
   /** Spark's `xxhash64(lit(seed), token, pos)` for int columns: left fold of
     * XXH64.hashInt starting at seed 42 (catalyst XxHash64 semantics). */
@@ -88,26 +88,6 @@ object TokenKernel {
   /** TokenAdapter.hashFrac mirror: hash → double in [0, 1). */
   @inline private def hashFrac(seedLit: Int, token: Int, pos: Int): Double =
     hash3(seedLit, token, pos).toDouble / 1.8446744073709552e19 + 0.5
-
-  /** Geo.haversine mirror (same op order; java.lang.Math == codegen). */
-  @inline private def haversine(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val sdLat = math.sin((math.toRadians(lat2) - math.toRadians(lat1)) / 2.0)
-    val sdLon = math.sin((math.toRadians(lon2) - math.toRadians(lon1)) / 2.0)
-    val a = sdLat * sdLat + math.cos(p1) * math.cos(p2) * sdLon * sdLon
-    2.0 * math.atan2(math.sqrt(a), math.sqrt(1.0 - a)) * EarthR
-  }
-
-  /** Geo.bearing mirror (pmod(x, 360) = Spark Pmod double semantics). */
-  @inline private def bearing(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val dLon = math.toRadians(lon2) - math.toRadians(lon1)
-    val y = math.cos(p2) * math.sin(dLon)
-    val x = math.cos(p1) * math.sin(p2) - math.sin(p1) * math.cos(p2) * math.cos(dLon)
-    val deg = math.toDegrees(math.atan2(y, x))
-    val r = deg % 360.0
-    if (r < 0) r + 360.0 else r
-  }
 
   /** Geo.infToNull mirror: a ±Inf result is "null" (undefined); genuine NaN
     * stays a defined VALUE (Spark's sum/compare treat NaN as a value). */
@@ -170,9 +150,9 @@ object TokenKernel {
             if (positions eq null) dtMicros
             else (pos.toLong - positions(i - 1).toLong) * dtMicros
           val dt = dtMic.toDouble / 1e6
-          dist = haversine(pLat, pLon, lat, lon); dDist = true
-          distStart = haversine(lat0, lon0, lat, lon)
-          brg = bearing(pLat, pLon, lat, lon); dBrg = true
+          dist = Geo.haversine(pLat, pLon, lat, lon); dDist = true
+          distStart = Geo.haversine(lat0, lon0, lat, lon)
+          brg = Geo.bearing(pLat, pLon, lat, lon); dBrg = true
           // derivative defined iff BOTH the current and lagged upstream
           // values are defined (a null on either side nulls the window
           // expression) and the division didn't overflow (infToNull)

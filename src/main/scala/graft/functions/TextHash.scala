@@ -21,17 +21,10 @@ object TextHash {
     org.apache.spark.sql.GraftSqlBridge.expression(c)
 
   /** Polynomial rolling hash of a string: fold h → (h·31 + code) mod P.
-    * Native codegen'd kernel ([[PolyHashExpr]]); [[polyHashHof]] is the
-    * declarative formulation it is parity-tested against. */
+    * Native codegen'd kernel ([[PolyHashExpr]]); TextKernelParitySpec tests
+    * it against a declarative formulation (`TextHashReference` in the
+    * tests). */
   def polyHash(text: Column): Column = kcol(PolyHashExpr(kexp(text)))
-
-  /** HOF formulation of [[polyHash]] (kept as the parity reference). */
-  def polyHashHof(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), c => ascii(c).cast("long")),
-      lit(0L),
-      (h, c) => (h * 31L + c) % P
-    )
 
   /** Whitespace tokens, empties dropped (leading/trailing-safe). */
   def tokens(text: Column): Column =
@@ -43,10 +36,6 @@ object TextHash {
   /** Per-language stopword-hit counts, one codegen'd pass
     * ([[LangHitsExpr]] over [[TextHashKernel.LangProfiles]]). */
   def langHits(text: Column): Column = kcol(LangHitsExpr(kexp(text)))
-
-  /** HOF formulation of [[tokenHashes]] (parity reference). */
-  def tokenHashesHof(text: Column): Column =
-    transform(tokens(text), w => polyHashHof(w))
 
   /** Distinct k-word shingle hashes from a token-hash array:
     * s_i = (wh_i·31² + wh_{i+1}·31 + … ) mod P (codegen'd kernel). */
@@ -68,17 +57,6 @@ object TextHash {
     when(n >= k, combined).otherwise(array().cast("array<bigint>"))
   }
 
-  /** HOF formulation of [[shingleHashes]] (parity reference): O(n·k) per
-    * row via k shifted zip_with views. */
-  def shingleHashesHof(tokenHashes: Column, k: Int): Column = {
-    val n = size(tokenHashes)
-    val win = n - (k - 1)
-    val combined = (1 until k).foldLeft(slice(tokenHashes, lit(1), win)) { (acc, j) =>
-      zip_with(acc, slice(tokenHashes, lit(j + 1), win), (a, b) => (a * 31L + b) % P)
-    }
-    when(n >= k, array_distinct(combined)).otherwise(array().cast("array<bigint>"))
-  }
-
   /** Universal hash family over [0,P): h_i(x) = (a_i·x + b_i) mod P with
     * fixed odd multipliers — identical in SQL. */
   def affine(x: Column, i: Int): Column = {
@@ -92,29 +70,10 @@ object TextHash {
   def minhash(shingles: Column, numHashes: Int): Column =
     kcol(MinhashExpr(kexp(shingles), numHashes))
 
-  /** HOF formulation of [[minhash]] (parity reference): ONE fold over the
-    * shingle array computing all hash functions per element. */
-  def minhashHof(shingles: Column, numHashes: Int): Column = {
-    val init = array(Seq.fill(numHashes)(lit(P)): _*)
-    aggregate(
-      shingles,
-      init,
-      (acc, x) => {
-        val hashes = array((0 until numHashes).map { i =>
-          val a = 2654435761L % P * (2 * i + 1) % P
-          val b = (40503L * (i + 1)) % P
-          (x * a % P + b) % P
-        }: _*)
-        zip_with(acc, hashes, (m, h) => least(m, h))
-      }
-    )
-  }
-
   /** Repetition metrics [dup_2gram_frac, dup_3gram_frac, top_2gram_frac]
     * from a token-hash array — codegen'd kernel ([[RepetitionExpr]]); the
-    * HOF formulation lives in
-    * [[graft.text.TextFeatures.withRepetitionHof]] as the parity
-    * reference. */
+    * declarative formulation lives in the tests (`TextFeaturesReference`)
+    * as the parity reference. */
   def repetitionMetrics(tokenHashes: Column): Column =
     kcol(RepetitionExpr(kexp(tokenHashes)))
 

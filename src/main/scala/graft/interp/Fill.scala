@@ -33,10 +33,7 @@ import org.apache.spark.sql.functions._
   * (same partitioning), the second direction adding only its mirrored
   * sort. Cumulative `last(ignoreNulls)` frames are O(1) state per row
   * (Spark's UnboundedPrecedingWindowFunctionFrame), no per-group
-  * buffering beyond the partition spill already inherent to window sorts;
-  * whale entities band-split exactly like the kinematic windows (same
-  * key, same fix: [[graft.features.Kinematic.withKinematicsSalted]]'s
-  * banding applies if profiling ever demands it). */
+  * buffering beyond the partition spill already inherent to window sorts. */
 object Fill {
 
   private def carried(

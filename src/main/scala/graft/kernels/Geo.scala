@@ -1,12 +1,20 @@
 package graft.kernels
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
-/** Geodesic scalar kernels as pure Column expressions (whole-stage codegen;
-  * no UDFs). Formulas match the reference exactly:
+/** Geodesic scalar kernels. Formulas match the reference exactly:
   * ptrail/utilities/DistanceCalculator.py:17-75, RADIUS_OF_EARTH=6371 km
   * (ptrail/utilities/constants.py:27).
+  *
+  * Each formula is defined ONCE, as a scalar function over doubles. The
+  * Column API, the SQL functions ([[graft.extensions.GraftExtensions]]),
+  * the per-document kernel ([[graft.features.TokenKernel]]) and
+  * [[nearPoi]] all call it: Catalyst plans it as one codegen'd static call
+  * ([[invoke]]), so the plan and the typed kernels run the same bytecode.
   */
 object Geo {
 
@@ -16,25 +24,52 @@ object Geo {
     * `d = 2·atan2(√a, √(1−a)) · R` with
     * `a = sin²(Δφ/2) + cos φ1 · cos φ2 · sin²(Δλ/2)`
     * (DistanceCalculator.py:36-42 — note the atan2 form, not asin). */
-  def haversine(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val p1 = radians(lat1); val p2 = radians(lat2)
-    val sdLat = sin((radians(lat2) - radians(lat1)) / 2.0)
-    val sdLon = sin((radians(lon2) - radians(lon1)) / 2.0)
-    val a = sdLat * sdLat + cos(p1) * cos(p2) * sdLon * sdLon
-    lit(2.0) * atan2(sqrt(a), sqrt(lit(1.0) - a)) * EarthRadiusMeters
+  def haversine(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
+    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
+    val sdLat = math.sin((p2 - p1) / 2.0)
+    val sdLon = math.sin((math.toRadians(lon2) - math.toRadians(lon1)) / 2.0)
+    val a = sdLat * sdLat + math.cos(p1) * math.cos(p2) * sdLon * sdLon
+    2.0 * atan2(math.sqrt(a), math.sqrt(1.0 - a)) * EarthRadiusMeters
   }
 
   /** Initial bearing p1→p2 in degrees in [0, 360).
     * `atan2(cos φ2 sin Δλ, cos φ1 sin φ2 − sin φ1 cos φ2 cos Δλ)` then
-    * floored-mod 360 (numpy `% 360.0` ⇒ sign of divisor ⇒ Spark pmod)
-    * (DistanceCalculator.py:66-75). */
-  def bearing(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val p1 = radians(lat1); val p2 = radians(lat2)
-    val dLon = radians(lon2) - radians(lon1)
-    val y = cos(p2) * sin(dLon)
-    val x = cos(p1) * sin(p2) - sin(p1) * cos(p2) * cos(dLon)
-    pmod(degrees(atan2(y, x)), lit(360.0))
+    * floored-mod 360 (numpy `% 360.0` ⇒ sign of divisor ⇒ Spark `pmod`:
+    * `(r + 360) % 360` for a negative `r`, so a tiny negative angle wraps
+    * to 0, never to 360) (DistanceCalculator.py:66-75). */
+  def bearing(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
+    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
+    val dLon = math.toRadians(lon2) - math.toRadians(lon1)
+    val y = math.cos(p2) * math.sin(dLon)
+    val x = math.cos(p1) * math.sin(p2) - math.sin(p1) * math.cos(p2) * math.cos(dLon)
+    val r = math.toDegrees(atan2(y, x)) % 360.0
+    if (r < 0) {
+      // r ∈ (−360, 0) ⇒ r + 360 ∈ (0, 360]; `% 360` only maps 360 to 0
+      val s = r + 360.0
+      if (s == 360.0) 0.0 else s
+    } else r
   }
+
+  /** Catalyst's `atan2`: `+ 0.0` folds −0.0 into 0.0 on both arguments. */
+  @inline private def atan2(y: Double, x: Double): Double = math.atan2(y + 0.0, x + 0.0)
+
+  /** `Geo.<fn>(…)` as one Catalyst expression: a codegen'd static call with
+    * implicit double casts on every argument, null if any argument is null,
+    * never null otherwise. */
+  def invoke(fn: String, args: Seq[Expression]): Expression =
+    StaticInvoke(getClass, DoubleType, fn, args, args.map(_ => DoubleType),
+      propagateNull = true, returnNullable = false)
+
+  private def invokeCol(fn: String, args: Column*): Column =
+    GraftSqlBridge.column(invoke(fn, args.map(GraftSqlBridge.expression)))
+
+  /** [[haversine]] over columns. */
+  def haversine(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
+    invokeCol("haversine", lat1, lon1, lat2, lon2)
+
+  /** [[bearing]] over columns. */
+  def bearing(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
+    invokeCol("bearing", lat1, lon1, lat2, lon2)
 
   /** Driver-side bounding box for a radius around a point:
     * Δlat = r/R, Δlon = asin(sin Δlat / cos lat)
@@ -61,24 +96,15 @@ object Geo {
 
   /** Scalar kernel for [[graft.features.Contextual.visitedPoi]]: ∃ layer row
     * r with |haversine(point, r) − r.dist| ≤ thr, over the collected layer
-    * arrays. Trig op order mirrors [[haversine]] exactly (java.lang.Math ==
-    * whole-stage-codegen intrinsics), cos(point) hoisted (pure, same value).
-    * Returns 1 = true, 0 = false, −1 = null (three-valued OR: no hit but the
-    * layer had a null-field row the declarative chain would null on). */
+    * arrays. Returns 1 = true, 0 = false, −1 = null (three-valued OR: no hit
+    * but the layer had a null-field row the declarative chain would null
+    * on). */
   def nearPoi(lat: Double, lon: Double,
       slat: Array[Double], slon: Array[Double], sdist: Array[Double],
       thr: Double, hasNullRow: Boolean): Byte = {
-    val p1 = math.toRadians(lat)
-    val c1 = math.cos(p1)
-    val rlon1 = math.toRadians(lon)
     var i = 0
     while (i < slat.length) {
-      val p2 = math.toRadians(slat(i))
-      val sdLat = math.sin((p2 - p1) / 2.0)
-      val sdLon = math.sin((math.toRadians(slon(i)) - rlon1) / 2.0)
-      val a = sdLat * sdLat + c1 * math.cos(p2) * sdLon * sdLon
-      val d = 2.0 * math.atan2(math.sqrt(a), math.sqrt(1.0 - a)) * EarthRadiusMeters
-      if (math.abs(d - sdist(i)) <= thr) return 1
+      if (math.abs(haversine(lat, lon, slat(i), slon(i)) - sdist(i)) <= thr) return 1
       i += 1
     }
     if (hasNullRow) -1 else 0

@@ -17,9 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** media row: id, modality tag, payload, declared metadata. */
-  val MediaSchema = "id BIGINT, modality STRING, media BINARY, meta STRUCT<width:INT, height:INT, codec:STRING, duration_ms:INT>"
-
   /** Deterministic synthetic media table (seeded bytes; no external data). */
   def syntheticMedia(spark: SparkSession, n: Long, payloadBytes: Int = 256, seed: Long = 42L): DataFrame =
     spark.range(n).select(

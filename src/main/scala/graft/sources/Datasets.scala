@@ -38,9 +38,4 @@ object Datasets {
     val cleaned = if (dataset == "ships") raw.na.drop() else raw
     Canonical.ingest(cleaned, id = id, ts = dt, lat = lat, lon = lon)
   }
-
-  /** starkey_habitat is a plain table in the reference (no trajectory
-    * columns, Datasets.py:193-207) — a straight CSV read. */
-  def loadHabitat(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 }

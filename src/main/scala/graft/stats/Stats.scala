@@ -124,16 +124,4 @@ object Stats {
     pivoted.as("_pv").join(moments.as("_mo"), cond, "right")
       .select(keys.map(k => col(s"_mo.`$k`").as(k)) ++ ordered: _*)
   }
-
-  /** G2 long form — (entity[, seg], feature, stat, value); derived from the
-    * wide agg by an unpivot, not by re-aggregating. */
-  def kinematicStatsLong(df: DataFrame, s: TrajSchema, segCol: Option[String] = None): DataFrame = {
-    val wide = kinematicStatsWide(df, s, segCol)
-    val keys = s.id +: segCol.toSeq
-    val valueCols = wide.columns.filterNot(keys.contains)
-    val stackExpr = valueCols
-      .map(c => s"'${c.replace("'", "")}', cast(`$c` as double)")
-      .mkString(s"stack(${valueCols.length}, ", ", ", ") as (stat_feature, value)")
-    wide.selectExpr(keys.map(k => s"`$k`") :+ stackExpr: _*)
-  }
 }

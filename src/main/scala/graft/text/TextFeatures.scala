@@ -16,10 +16,6 @@ object TextFeatures {
   private def countMatches(text: Column, pattern: String): Column =
     length(text) - length(regexp_replace(text, pattern, ""))
 
-  /** Whitespace token count (empties dropped). */
-  def withTokenCount(df: DataFrame, text: String = "text"): DataFrame =
-    df.withColumn("n_tokens", size(TextHash.tokens(col(text))))
-
   /** PII-ish surface-pattern counts (emails, IPv4s, long digit runs) — the
     * signal a scrubbing/filter stage keys on before redaction. Counts only:
     * redaction itself is a `regexp_replace` away and policy-specific.
@@ -80,16 +76,13 @@ object TextFeatures {
   val StopwordProfiles: Seq[(String, Seq[String])] =
     graft.functions.TextHashKernel.LangProfiles
 
-  def langScore(toks: Column, words: Seq[String]): Column =
-    if (words.isEmpty) lit(0)
-    else size(filter(toks, w => lower(w).isin(words.map(lit(_)): _*)))
-
   /** Adds per-language hit counts + `lang_pred` (argmax, fixed-order ties,
     * "und" = undetermined when nothing matches). One codegen'd pass over
     * the raw string ([[graft.functions.LangHitsExpr]] — one hash-map probe
     * per token) instead of langs × words interpreted `lower().isin()`
-    * comparisons per token; [[withLangIdHof]] is the parity reference
-    * (LangIdParitySpec asserts equality). */
+    * comparisons per token; LangIdParitySpec asserts equality with the HOF
+    * formulation the DuckDB oracle mirrors (`TextFeaturesReference` in the
+    * tests). */
   def withLangId(df: DataFrame, text: String = "text"): DataFrame = {
     val hit = df.withColumn("_lh", TextHash.langHits(col(text)))
     val scored = StopwordProfiles.zipWithIndex.foldLeft(hit) { case (acc, ((l, _), i)) =>
@@ -98,20 +91,9 @@ object TextFeatures {
     scored.withColumn("lang_pred", argmaxLang).drop("_lh")
   }
 
-  /** HOF formulation of [[withLangId]] (parity reference — the exact
-    * `size(filter(toks, lower(w).isin(…)))` chain the DuckDB oracle
-    * mirrors). */
-  def withLangIdHof(df: DataFrame, text: String = "text"): DataFrame = {
-    val toks = TextHash.tokens(col(text))
-    val scored = StopwordProfiles.foldLeft(df.withColumn("_toks", toks)) { case (acc, (l, ws)) =>
-      acc.withColumn(s"hits_$l", langScore(col("_toks"), ws))
-    }
-    scored.withColumn("lang_pred", argmaxLang).drop("_toks")
-  }
-
   /** Sequential argmax over the `hits_<lang>` columns: ties keep the
     * earlier language, "und" when nothing matches. */
-  private def argmaxLang: Column =
+  private[text] def argmaxLang: Column =
     StopwordProfiles.map(_._1).foldLeft((lit("und"), lit(0))) { case ((bl, bs), l) =>
       val better = col(s"hits_$l") > bs
       (when(better, lit(l)).otherwise(bl), when(better, col(s"hits_$l")).otherwise(bs))
@@ -126,20 +108,6 @@ object TextFeatures {
     * (1-permutation minhash) — cheap near-dup prefilter. */
   def withMinShingle(df: DataFrame, text: String = "text", k: Int = 3): DataFrame =
     df.withColumn("min_shingle", array_min(TextHash.shingleHashes(TextHash.tokenHashes(col(text)), k)))
-
-  /** Max run length over a SORTED array = the highest element frequency —
-    * one fold, no map state. Part of the HOF parity reference for the
-    * codegen [[graft.functions.RepetitionExpr]] kernel (see
-    * [[withRepetitionHof]]). */
-  private def maxFreq(sorted: Column): Column =
-    aggregate(
-      sorted,
-      struct(lit(Long.MinValue).as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc("prev"), acc("run") + 1L).otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"), greatest(acc("best"), run).as("best"))
-      },
-      acc => acc("best"))
 
   /** Within-document repetition metrics — the Gopher/FineWeb-style quality
     * signals a pretraining filter thresholds on (heavily repeated n-grams
@@ -161,8 +129,9 @@ object TextFeatures {
     * ([[graft.functions.RepetitionExpr]]: primitive gram buffers, one sort
     * + run-length pass per k) — the interpreted-HOF chain it replaced
     * (`aggregate` fold + `array_sort`/`array_distinct`, ~1µs/element with
-    * an UnsafeArrayData per step) is kept below as [[withRepetitionHof]]
-    * and bit-parity-proven in TextKernelParitySpec. */
+    * an UnsafeArrayData per step) is kept in the tests
+    * (`TextFeaturesReference`) and bit-parity-proven in
+    * TextKernelParitySpec. */
   def withRepetition(df: DataFrame, text: String = "text"): DataFrame = {
     val m = TextHash.repetitionMetrics(TextHash.tokenHashes(col(text)))
     // coalesce mirrors the HOF's null-text behavior (its WHEN branches
@@ -172,24 +141,5 @@ object TextFeatures {
       .withColumn("dup_3gram_frac", coalesce(col("_rep")(1), lit(0.0)))
       .withColumn("top_2gram_frac", coalesce(col("_rep")(2), lit(0.0)))
       .drop("_rep")
-  }
-
-  /** HOF formulation of [[withRepetition]] (parity reference only). */
-  def withRepetitionHof(df: DataFrame, text: String = "text"): DataFrame = {
-    val th = TextHash.tokenHashes(col(text))
-    def gramFracs(k: Int): (Column, Column) = {
-      val grams = TextHash.positionedShingleHashes(th, k)
-      val n = size(grams).cast("double")
-      val dup = when(size(grams) > 0,
-        (size(grams) - size(array_distinct(grams))).cast("double") / n).otherwise(0.0)
-      val top = when(size(grams) > 0,
-        maxFreq(array_sort(grams)).cast("double") / n).otherwise(0.0)
-      (dup, top)
-    }
-    val (dup2, top2) = gramFracs(2)
-    val (dup3, _) = gramFracs(3)
-    df.withColumn("dup_2gram_frac", dup2)
-      .withColumn("dup_3gram_frac", dup3)
-      .withColumn("top_2gram_frac", top2)
   }
 }

@@ -3,9 +3,10 @@ package graft
 import graft.kernels.Geo
 import org.apache.spark.sql.functions._
 
-/** The SparkSessionExtensions-injected SQL functions must be the SAME
-  * expression trees as the Column API (registered via spark.sql.extensions
-  * in TestSpark) — bit equality between the SQL and Column surfaces. */
+/** The SparkSessionExtensions-injected SQL functions (registered via
+  * spark.sql.extensions in TestSpark) build the same `Geo.invoke` static
+  * call as the Column API — bit equality between the SQL and Column
+  * surfaces, inside whole-stage codegen. */
 class ExtensionsSpec extends SparkSpec {
 
   test("haversine_m / bearing_deg SQL functions match the Column kernels bitwise") {

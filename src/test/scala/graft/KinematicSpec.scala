@@ -1,6 +1,5 @@
 package graft
 
-import graft.core.{SyntheticCorpus, TokenAdapter}
 import graft.features.Kinematic
 import graft.kernels.Geo
 import org.apache.spark.sql.functions._
@@ -59,17 +58,6 @@ class KinematicSpec extends SparkSpec {
     assertClose(Some(dt), Some(13.690153134343692 + 7.403787866531697 + 0.17039986568227478 + 21261.806616992468))
     val nl = Kinematic.numberOfLocations(fixture, S).where(col("traj_id") === "1").first().getLong(1)
     assert(nl == 5) // all five (lat, lon) pairs distinct in the de-duped fixture
-  }
-
-  test("salted/banded kinematics EXACTLY equals the unsalted plan") {
-    val corpus = SyntheticCorpus.generate(spark, nDocs = 40, medianLen = 50, skewEvery = 10, skewFactor = 8)
-    val (grid, ts) = TokenAdapter.explodeTokens(corpus)
-    val plain = Kinematic.withKinematics(grid, ts)
-    val salted = Kinematic.withKinematicsSalted(grid, ts, "pos", bandRows = 64, overlap = 3)
-    val cols = Seq("doc_id", "pos") ++ Kinematic.AllFeatures
-    val a = plain.select(cols.map(col): _*)
-    val b = salted.select(cols.map(col): _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
   test("Geo.boundingBoxByRadius matches the reference golden vector") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.text.TextFeatures
+import graft.text.{TextFeatures, TextFeaturesReference}
 import org.apache.spark.sql.functions._
 
 /** The codegen langid kernel (one hash-map probe per token) must equal the
@@ -29,7 +29,7 @@ class LangIdParitySpec extends SparkSpec {
   test("kernel == HOF parity on every language count and the argmax") {
     val cols = TextFeatures.StopwordProfiles.map { case (l, _) => col(s"hits_$l") } :+ col("lang_pred")
     val k = TextFeatures.withLangId(fixtures).select(col("doc_id") +: cols: _*)
-    val h = TextFeatures.withLangIdHof(fixtures).select(col("doc_id") +: cols: _*)
+    val h = TextFeaturesReference.withLangIdHof(fixtures).select(col("doc_id") +: cols: _*)
     assert(k.exceptAll(h).count() == 0 && h.exceptAll(k).count() == 0,
       s"kernel:\n${k.collect().mkString("\n")}\nhof:\n${h.collect().mkString("\n")}")
   }
@@ -59,7 +59,7 @@ class LangIdParitySpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val cols = TextFeatures.StopwordProfiles.map { case (l, _) => col(s"hits_$l") } :+ col("lang_pred")
     val k = TextFeatures.withLangId(docs).select(col("doc_id") +: cols: _*)
-    val h = TextFeatures.withLangIdHof(docs).select(col("doc_id") +: cols: _*)
+    val h = TextFeaturesReference.withLangIdHof(docs).select(col("doc_id") +: cols: _*)
     assert(k.exceptAll(h).count() == 0 && h.exceptAll(k).count() == 0)
   }
 }

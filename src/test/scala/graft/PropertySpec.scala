@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property-based invariants (SURVEY.md §5) via raw scalacheck: geodesic
-  * kernel laws on the driver-side scalar mirror, and engine-level laws
+  * kernel laws on the shipped scalar kernel, and engine-level laws
   * (session monotonicity, as-of anti-leakage, v1 ≡ v2) on randomized small
   * frames. */
 class PropertySpec extends SparkSpec {
@@ -23,22 +23,13 @@ class PropertySpec extends SparkSpec {
   private val genLat = Gen.choose(-89.0, 89.0)
   private val genLon = Gen.choose(-179.0, 179.0)
 
-  // scalar mirror of Geo.haversine (same formula, driver-side)
-  private def hav(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val sdLat = math.sin((math.toRadians(lat2) - math.toRadians(lat1)) / 2.0)
-    val sdLon = math.sin((math.toRadians(lon2) - math.toRadians(lon1)) / 2.0)
-    val a = sdLat * sdLat + math.cos(p1) * math.cos(p2) * sdLon * sdLon
-    2.0 * math.atan2(math.sqrt(a), math.sqrt(1.0 - a)) * Geo.EarthRadiusMeters
-  }
-
   test("haversine: symmetric, zero at identity, bounded by half circumference") {
     check(Prop.forAll(genLat, genLon, genLat, genLon) { (la1, lo1, la2, lo2) =>
-      val d = hav(la1, lo1, la2, lo2)
+      val d = Geo.haversine(la1, lo1, la2, lo2)
       d >= 0.0 &&
-        math.abs(d - hav(la2, lo2, la1, lo1)) <= 1e-6 &&
+        math.abs(d - Geo.haversine(la2, lo2, la1, lo1)) <= 1e-6 &&
         d <= math.Pi * Geo.EarthRadiusMeters + 1.0 &&
-        hav(la1, lo1, la1, lo1) == 0.0
+        Geo.haversine(la1, lo1, la1, lo1) == 0.0
     }, tests = 200)
   }
 

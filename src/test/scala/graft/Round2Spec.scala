@@ -1,6 +1,6 @@
 package graft
 
-import graft.ann.Similarity
+import graft.ann.{Similarity, SimilarityReference}
 import graft.dedup.Dedup
 import graft.filters.Filters
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ class LshBucketParitySpec extends SparkSpec {
     Seq(2, 6, 16).foreach { planes =>
       val bad = e.select(
         (Similarity.lshBucket(col("embedding"), planes) <=>
-          Similarity.lshBucketHof(col("embedding"), planes)).as("ok")
+          SimilarityReference.lshBucketHof(col("embedding"), planes)).as("ok")
       ).where(!col("ok")).count()
       assert(bad == 0, s"$planes planes: $bad rows diverge between kernel and HOF buckets")
     }
@@ -30,7 +30,7 @@ class LshBucketParitySpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val got = v.select(col("vec_id"),
         Similarity.lshBucket(col("embedding"), 6).as("k"),
-        Similarity.lshBucketHof(col("embedding"), 6).as("h"))
+        SimilarityReference.lshBucketHof(col("embedding"), 6).as("h"))
       .orderBy("vec_id").collect()
     assert(got(0).getLong(1) == 63L && got(0).getLong(2) == 63L, s"NaN row: ${got(0)}")
     assert(got(1).getLong(1) == got(1).getLong(2))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextHash
+import graft.functions.{TextHash, TextHashReference}
 import org.apache.spark.sql.functions._
 
 /** The codegen'd text-hash kernels must agree EXACTLY with the declarative
@@ -16,12 +16,12 @@ class TextKernelParitySpec extends SparkSpec {
       .select(col("text")).unionByName(extra)
 
     val cmp = t.select(
-      (TextHash.polyHash(col("text")) <=> TextHash.polyHashHof(col("text"))).as("ph"),
-      (TextHash.tokenHashes(col("text")) <=> TextHash.tokenHashesHof(col("text"))).as("th"),
+      (TextHash.polyHash(col("text")) <=> TextHashReference.polyHashHof(col("text"))).as("ph"),
+      (TextHash.tokenHashes(col("text")) <=> TextHashReference.tokenHashesHof(col("text"))).as("th"),
       (TextHash.shingleHashes(TextHash.tokenHashes(col("text")), 3) <=>
-        TextHash.shingleHashesHof(TextHash.tokenHashesHof(col("text")), 3)).as("sh"),
+        TextHashReference.shingleHashesHof(TextHashReference.tokenHashesHof(col("text")), 3)).as("sh"),
       (TextHash.minhash(TextHash.shingleHashes(TextHash.tokenHashes(col("text")), 3), 16) <=>
-        TextHash.minhashHof(TextHash.shingleHashesHof(TextHash.tokenHashesHof(col("text")), 3), 16)).as("mh")
+        TextHashReference.minhashHof(TextHashReference.shingleHashesHof(TextHashReference.tokenHashesHof(col("text")), 3), 16)).as("mh")
     )
     val bad = cmp.where(!col("ph") || !col("th") || !col("sh") || !col("mh")).count()
     assert(bad == 0, s"$bad rows diverge between kernel and HOF formulations")
@@ -39,7 +39,7 @@ class TextKernelParitySpec extends SparkSpec {
       .withColumnRenamed("dup_2gram_frac", "k2")
       .withColumnRenamed("dup_3gram_frac", "k3")
       .withColumnRenamed("top_2gram_frac", "kt")
-    val both = graft.text.TextFeatures.withRepetitionHof(kern)
+    val both = graft.text.TextFeaturesReference.withRepetitionHof(kern)
     val bad = both.where(!(
       (col("k2") <=> col("dup_2gram_frac")) &&
         (col("k3") <=> col("dup_3gram_frac")) &&
